@@ -61,22 +61,29 @@ def _aggs_for(col: str, dtype: T.DataType, exact: bool) -> list[Column]:
     ]
 
 
-def profile_columns(df: DataFrame, columns: list[str] | None = None, exact: bool = False) -> dict[str, dict]:
-    """Profile every (profilable) column in one aggregation pass.
+def profile_columns(
+    df: DataFrame, columns: list[str] | None = None, exact: bool = False
+) -> tuple[dict[str, dict], int]:
+    """Profile every (profilable) column and count the rows in one
+    aggregation pass.
 
-    Returns {column: {min,max,avg,med,unique,count,top}} matching the
-    ColumnProfile facet (models/odpf/assets/facets/v1beta1/schema.pb.go:180).
+    Returns ({column: {min,max,avg,med,unique,count,top}}, row_count);
+    the profiles match the ColumnProfile facet
+    (models/odpf/assets/facets/v1beta1/schema.pb.go:180). The row count
+    is one more aggregate of the same scan, so a caller that needs both
+    runs one job, not a profile and a count().
     """
     cols = columns or profilable_columns(df)
     types = dict(zip(df.schema.names, [f.dataType for f in df.schema.fields]))
-    aggs: list[Column] = []
+    aggs: list[Column] = [F.count(F.lit(1)).alias("__rows")]
     for c in cols:
         aggs.extend(_aggs_for(c, types[c], exact))
     row = df.agg(*aggs).collect()[0].asDict()
-    return {
+    profiles = {
         c: {f: row[f"{c}__{f}"] for f in _PROFILE_FIELDS}
         for c in cols
     }
+    return profiles, row["__rows"]
 
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -88,7 +95,6 @@ def profile_df(
     exact: bool = True,
     round_to: int = 4,
     quantiles: dict[str, float] | None = None,
-    distinct_budget: int | None = 8_000_000,
 ) -> DataFrame:
     """DataFrame-shaped profile: one output row per column, columns
     (column, min, max, avg, med, unique, count, top[, *quantiles]).

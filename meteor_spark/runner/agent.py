@@ -26,6 +26,12 @@ Spark-first divergences (SURVEY.md §4 — deliberate):
     extraction pass (agent/stream.go:51-103).
   - Record count comes from df.count() on the cached frame — one extra
     action on cached data, not a second extraction.
+  - Driver-built asset sets (sources.base.assets_df) arrive as an Arrow
+    LocalRelation, into which row-local processors (filter, enrich) fold
+    at optimization. The cached frame then has one partition per row up
+    to defaultParallelism, not defaultParallelism slices of a pickled
+    RDD, and driver-side sinks stream it through one to_json pass
+    (sinks.file.json_lines) at one job per partition.
 """
 
 from __future__ import annotations

@@ -5,22 +5,40 @@ Reference (plugins/sinks/file/file.go:57-146): path must look like
 `overwrite` config selects truncate vs append.
 
 Spark translation: ndjson is exactly Spark's json lines format. To honor
-the reference's single-file contract the rows are written via toJSON
-to the target path (collect through an iterator, not a big .collect()
-list). For cluster-scale output use overwrite=dir mode, which maps to
-df.write.json — the distributed path.
+the reference's single-file contract the rows are streamed to the target
+path by json_lines: one to_json(struct(*)) projection evaluated in the
+JVM, pulled through toLocalIterator (one partition at a time, never a big
+.collect() list). For cluster-scale output use distributed=true, which
+maps to df.write.json — the distributed path.
 """
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
+from typing import Iterator
 
 import yaml
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from meteor_spark.plugins_base import Field, InvalidConfigError, ConfigError, Sink
 from meteor_spark.registry import register_sink
+
+
+def json_lines(df: DataFrame) -> Iterator[str]:
+    """One JSON document per row, streamed to the driver partition by
+    partition — the shared record feed of the driver-side sinks (file,
+    compass, stencil).
+
+    Same text as df.toJSON() (nulls omitted, session time zone) except
+    for maps of more than four entries: toJSON round-trips rows through
+    Scala maps and so prints those keys in Scala hash order, where
+    to_json keeps the order the map holds. toJSON also goes through the
+    Python RDD path; this projection stays in the JVM until the string."""
+    for row in df.select(F.to_json(F.struct("*"))).toLocalIterator():
+        yield row[0]
 
 
 @register_sink("file", "Save output to a file (ndjson/yaml)")
@@ -55,14 +73,10 @@ class FileSink(Sink):
         mode = "w" if self.config["overwrite"] else "a"
         n = 0
         with open(path, mode) as f:
-            if fmt in ("json", "ndjson"):
-                for line in df.toJSON().toLocalIterator():
+            for line in json_lines(df):
+                if fmt in ("json", "ndjson"):
                     f.write(line + "\n")
-                    n += 1
-            else:
-                import json
-
-                for line in df.toJSON().toLocalIterator():
+                else:
                     yaml.safe_dump(json.loads(line), f, explicit_start=True, sort_keys=False)
-                    n += 1
+                n += 1
         return n

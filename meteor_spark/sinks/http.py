@@ -67,6 +67,7 @@ class HttpSink(Sink):
         batch = max(1, int(self.config["batch_size"]))
         max_retries = int(self.config["max_retries"])
         interval = float(self.config["retry_interval_s"])
+        sent = df.sparkSession.sparkContext.accumulator(0)
 
         def send_partition(rows):
             from meteor_spark.runner.retrier import retry
@@ -80,17 +81,21 @@ class HttpSink(Sink):
                 )
 
             buf = []
+            n = 0
             for line in rows:
                 buf.append(line)
+                n += 1
                 if len(buf) >= batch:
                     flush(buf)
                     buf.clear()
             if buf:
                 flush(buf)
+            sent.add(n)
 
-        js = df.toJSON()
-        js.foreachPartition(send_partition)
-        return df.count()
+        # one job: the record count rides along as an accumulator,
+        # added only once a partition has flushed every record
+        df.toJSON().foreachPartition(send_partition)
+        return sent.value
 
 
 def post_json(url: str, payload: dict, method: str = "POST", headers: dict | None = None, success_code: int = 200) -> None:

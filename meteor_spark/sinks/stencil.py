@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from meteor_spark.functions.typemap import avro_fields, json_schema_properties
 from meteor_spark.plugins_base import Field, Sink
 from meteor_spark.registry import register_sink
+from meteor_spark.sinks.file import json_lines
 from meteor_spark.sinks.http import post_json
 
 
@@ -59,7 +60,7 @@ class StencilSink(Sink):
         ns = self.config["namespace_id"]
         build = build_json_schema if self.config["format"] == "json" else build_avro_schema
         n = 0
-        for line in df.toJSON().toLocalIterator():
+        for line in json_lines(df):
             record = json.loads(line)
             if record.get("asset_type") != "Table":
                 continue  # stencil only handles Table schema facets

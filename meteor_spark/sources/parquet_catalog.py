@@ -68,8 +68,9 @@ class ParquetCatalogExtractor(Extractor):
         df = self._read(spark, str(t))
         name = t.stem
         profiles: dict[str, dict] = {}
+        total_rows = None
         if self.config["include_column_profile"]:
-            profiles = profile_columns(df)
+            profiles, total_rows = profile_columns(df)
         columns = [
             column_dict(
                 name=f.name,
@@ -82,7 +83,7 @@ class ParquetCatalogExtractor(Extractor):
         ]
         profile = None
         if self.config["include_row_count"]:
-            profile = {"total_rows": df.count()}
+            profile = {"total_rows": df.count() if total_rows is None else total_rows}
         preview = None
         if self.config["include_preview"]:
             n = self.config["max_preview_rows"]

@@ -16,7 +16,8 @@ def df(spark):
 
 
 def test_profile_columns_wide(df):
-    p = profile_columns(df, exact=True)
+    p, rows = profile_columns(df, exact=True)
+    assert rows == 4  # count(1): the all-null row counts
     assert p["id"]["min"] == "1" and p["id"]["max"] == "4"
     assert p["id"]["count"] == 4 and p["id"]["unique"] == 4
     assert p["val"]["count"] == 3  # nulls excluded (COUNT(col))
@@ -44,7 +45,7 @@ def test_profile_df_mode_deterministic_ties(spark):
 
 def test_profile_skips_complex_types(spark):
     df = spark.createDataFrame([(1, [1, 2])], "id long, arr array<long>")
-    p = profile_columns(df)
+    p, _ = profile_columns(df)
     assert "arr" not in p  # bigquery.go:340-343 skips repeated/record
 
 

@@ -123,7 +123,34 @@ def test_http_sink_retries_transient_5xx_executor_side(spark):
             }
         )
         df = spark.createDataFrame([(1,), (2,)], "id long").coalesce(1)
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        first = dag.nextJobId()
         assert sink.sink(df) == 2  # does NOT raise: the 503 was retried
         assert len(hits) == 2  # one failure + one successful retry
+        assert dag.nextJobId() - first == 1  # the count rides in the send job
     finally:
         srv.shutdown()
+
+
+def test_json_lines_match_tojson(spark):
+    import datetime as dt
+
+    from meteor_spark.sinks.file import json_lines
+    from meteor_spark.sources.base import assets_df
+
+    rows = [
+        {"resource": {"urn": "a", "name": "a"}, "properties": {"labels": {"k": "v", "a": "b"}, "tags": ["t", None]},
+         "timestamps": {"create_time": dt.datetime(2024, 1, 2, 3, 4, 5, 678901)},
+         "schema": [{"name": "c", "profile": {"avg": 1.5, "med": float("nan")}}]},
+        {"asset_type": "Topic", "properties": {"labels": {}}},
+        {},
+    ]
+    df = assets_df(spark, rows)
+    assert list(json_lines(df)) == df.toJSON().collect()
+    # maps over four entries: same document, keys in the map's own order
+    wide = assets_df(spark, [{"properties": {"labels": {f"k{i}": str(i) for i in range(9)}}}])
+    (line,) = json_lines(wide)
+    assert json.loads(line) == json.loads(wide.toJSON().first())
+    assert list(json.loads(line)["properties"]["labels"]) == [
+        k for (k,) in wide.selectExpr("explode(map_keys(properties.labels))").collect()
+    ]
