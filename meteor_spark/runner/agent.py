@@ -20,18 +20,16 @@ Spark-first divergences (SURVEY.md §4 — deliberate):
   - The record stream is a DataFrame; the middleware chain is a
     .transform() chain fused by whole-stage codegen, not a per-record
     loop.
-  - Before multi-sink fan-out the DataFrame is persisted, so each sink
-    action re-reads the cache instead of re-running the extractor —
-    the analogue of the reference's per-subscriber channels fed by one
-    extraction pass (agent/stream.go:51-103).
-  - Record count comes from df.count() on the cached frame — one extra
-    action on cached data, not a second extraction.
   - Driver-built asset sets (sources.base.assets_df) arrive as an Arrow
     LocalRelation, into which row-local processors (filter, enrich) fold
-    at optimization. The cached frame then has one partition per row up
-    to defaultParallelism, not defaultParallelism slices of a pickled
-    RDD, and driver-side sinks stream it through one to_json pass
-    (sinks.file.json_lines) at one job per partition.
+    at optimization. While the frame is local (sources.base.is_local)
+    the record count and the driver-side sinks' shared to_json pass
+    (sinks.file.json_lines) read the rows in place: no cache, no job.
+  - Any other frame is persisted before fan-out, so each sink re-reads
+    the cache instead of re-running the extractor — the analogue of the
+    reference's per-subscriber channels fed by one extraction pass
+    (agent/stream.go:51-103). Its record count is df.count() on the
+    cache, and json_lines streams it one job per partition.
 """
 
 from __future__ import annotations
@@ -48,6 +46,7 @@ from meteor_spark import registry
 from meteor_spark.plugins_base import InvalidConfigError
 from meteor_spark.recipe import Recipe
 from meteor_spark.runner import retrier
+from meteor_spark.sources.base import is_local
 
 log = logging.getLogger(__name__)
 
@@ -125,13 +124,14 @@ class Agent:
             for proc in procs:
                 df = proc.process(df)
 
-            # persist once, then one action per sink (reference:
-            # agent/stream.go:92-103 push-to-every-subscriber). ALWAYS
-            # persist: the record-count middleware's count() below is
-            # itself an action, so even a single-sink run takes >= 2
-            # passes over the pipeline without the cache
-            df = df.persist()
-            report.record_count = df.count()  # record-count middleware (agent.go:153-157)
+            # record-count middleware (agent.go:153-157), then one action
+            # per sink (agent/stream.go:92-103). A frame not already on the
+            # driver is cached first, or each action re-runs the pipeline
+            if is_local(df):
+                report.record_count = len(df.select().collect())
+            else:
+                df = df.persist()
+                report.record_count = df.count()
 
             sink_errors: list[str] = []
             for name, sink in sink_instances:

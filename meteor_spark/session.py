@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's memory (cgroup memory.max, else MemTotal), capped
+    at 48g: a heap the host cannot back gets the JVM OOM-killed."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")  # MemTotal
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            total = min(total, int(f.read()))  # "max" (no limit) -> ValueError
+    except (OSError, ValueError):
+        pass
+    return f"{min(total // 2 >> 20, 48 << 10)}m"
+
+
 def get_spark(app_name: str = "meteor_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -27,9 +39,9 @@ def get_spark(app_name: str = "meteor_spark", shuffle_partitions: int | None = N
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local mode = driver-only JVM; size it to the box (128 GiB) so
-        # wide aggregates and LSH joins never GC-thrash
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        # local mode = driver-only JVM; size it to the box so wide
+        # aggregates and LSH joins never GC-thrash
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -5,11 +5,11 @@ Reference (plugins/sinks/file/file.go:57-146): path must look like
 `overwrite` config selects truncate vs append.
 
 Spark translation: ndjson is exactly Spark's json lines format. To honor
-the reference's single-file contract the rows are streamed to the target
-path by json_lines: one to_json(struct(*)) projection evaluated in the
-JVM, pulled through toLocalIterator (one partition at a time, never a big
-.collect() list). For cluster-scale output use distributed=true, which
-maps to df.write.json — the distributed path.
+the reference's single-file contract the rows go to the target path
+through json_lines: one to_json(struct(*)) projection evaluated in the
+JVM, collected with no job when local, else streamed one partition at a
+time. For cluster-scale output use distributed=true, which maps to
+df.write.json — the distributed path.
 """
 
 from __future__ import annotations
@@ -25,19 +25,23 @@ from pyspark.sql import functions as F
 
 from meteor_spark.plugins_base import Field, InvalidConfigError, ConfigError, Sink
 from meteor_spark.registry import register_sink
+from meteor_spark.sources.base import is_local
 
 
 def json_lines(df: DataFrame) -> Iterator[str]:
-    """One JSON document per row, streamed to the driver partition by
-    partition — the shared record feed of the driver-side sinks (file,
-    compass, stencil).
+    """One JSON document per row — the shared record feed of the
+    driver-side sinks (file, console, compass, stencil). A local frame
+    (sources.base.is_local) is collect()ed on the driver with no Spark
+    job; any other streams through toLocalIterator, one partition at a
+    time, so a big frame never lands on the driver all at once.
 
     Same text as df.toJSON() (nulls omitted, session time zone) except
     for maps of more than four entries: toJSON round-trips rows through
     Scala maps and so prints those keys in Scala hash order, where
     to_json keeps the order the map holds. toJSON also goes through the
     Python RDD path; this projection stays in the JVM until the string."""
-    for row in df.select(F.to_json(F.struct("*"))).toLocalIterator():
+    lines = df.select(F.to_json(F.struct("*")))
+    for row in lines.collect() if is_local(lines) else lines.toLocalIterator():
         yield row[0]
 
 

@@ -32,6 +32,15 @@ def assets_df(spark: SparkSession, rows: list[dict[str, Any]]) -> DataFrame:
     return spark.createDataFrame(table, ASSET_SCHEMA)
 
 
+def is_local(df: DataFrame) -> bool:
+    """True when df's optimized plan is a LocalRelation (assets_df and what
+    folds into it), which collect() serves on the driver with no job. A
+    nondeterministic plan is not: Catalyst folds rand() in afresh at each
+    action, and only a cache pins one draw for the count and the sinks."""
+    qe = df._jdf.queryExecution()
+    return qe.analyzed().deterministic() and qe.optimizedPlan().nodeName() == "LocalRelation"
+
+
 def _converter(dt: T.DataType) -> Callable[[Any], Any] | None:
     """Python value -> Arrow-ready value for dt, or None when pyarrow
     takes the value as it is.

@@ -24,6 +24,7 @@ backlog in rate-limited batches without keeping the driver loop alive.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,11 +54,12 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The footer sniff lists the whole fixture directory and decodes a
     parquet footer on the DRIVER — ~0.2-0.4s of serial stall per call,
-    and every one of the ~13 streaming gates pays it. Memoized per
-    (session, path): schema METADATA only (never data or results), keyed
-    on applicationId so a new session re-sniffs — the same
-    session-scoped discipline as queries._shared."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    and every one of the ~13 streaming gates pays it. Memoized on
+    (session, path, mtime, size) of events.parquet: schema METADATA only
+    (never data or results); a new session or a rewritten file re-sniffs."""
+    path = os.path.join(sf_dir, "events.parquet")
+    st = os.stat(path)
+    key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_MEMO.get(key)
     if schema is None:
         schema = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema

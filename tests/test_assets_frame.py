@@ -7,12 +7,13 @@ import datetime as dt
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from meteor_spark.model.schema import ASSET_SCHEMA
 from meteor_spark.processors.enrich import merge_attributes
 from meteor_spark.recipe.loader import parse_recipe
 from meteor_spark.runner import Agent
-from meteor_spark.sources.base import assets_df
+from meteor_spark.sources.base import assets_df, is_local
 
 _UTC5 = dt.timezone(dt.timedelta(hours=5))
 
@@ -90,12 +91,21 @@ def test_filter_and_enrich_fold_into_local_relation(spark):
     assert [r.resource.name for r in out.collect()] == ["t1"]
 
 
-# jobs of one run of the recipe below on this commit: 3 tables x (profile
-# aggregate with its row count, preview), the runner's persist and
-# count, and one job per partition of the 2-row result in each sink. A
-# pickled-RDD asset frame has defaultParallelism partitions instead, and
-# each sink runs a job per partition (measured: 23 jobs at 4 cores, 31 at 8).
-RECIPE_JOB_BUDGET = 19
+def test_is_local(spark, tmp_path):
+    local = merge_attributes(assets_df(spark, [{"resource": _res("t1")}]).filter("resource.name = 't1'"), {"a": "b"})
+    assert is_local(local)
+    # Catalyst folds rand() into the relation too, but afresh per action
+    assert not is_local(local.withColumn("r", F.rand()))
+    spark.range(3).write.parquet(str(tmp_path / "p"))
+    assert not is_local(spark.read.parquet(str(tmp_path / "p")))
+
+
+# jobs of one run of the recipe below on this commit, all of them the
+# extractor's: 3 tables x (schema read, the two stages of the profile
+# aggregate with its row count, preview). The runner and the sinks run
+# none: the filtered, enriched asset frame is still a LocalRelation, so
+# the record count and both file sinks read it on the driver.
+RECIPE_JOB_BUDGET = 12
 
 
 def test_catalog_recipe_job_budget(spark, tmp_path):

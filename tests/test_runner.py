@@ -14,17 +14,26 @@ from meteor_spark.recipe.loader import PluginRecipe, Recipe
 from meteor_spark.runner import Agent
 from meteor_spark.runner.agent import LoggingMonitor
 from meteor_spark.runner.retrier import retry
+from meteor_spark.sources.base import assets_df
 
 
 @pytest.fixture(scope="module", autouse=True)
 def mock_plugins(request):
-    calls = {"fail_once": 0}
+    calls = {"fail_once": 0, "cache_seen": []}
 
     class MockExtractor(Extractor):
         CONFIG = {"n": Field(default=3, type=int)}
 
         def extract(self, spark):
             return spark.range(self.config["n"]).withColumnRenamed("id", "v")
+
+    class LocalExtractor(Extractor):
+        def extract(self, spark):
+            return assets_df(spark, [{"asset_type": "Table"}, {"asset_type": "Topic"}])
+
+    class CacheProbeSink(Sink):
+        def sink(self, df):
+            calls["cache_seen"].append((df.is_cached, _persistent_rdds(df.sparkSession)))
 
     class CollectSink(Sink):
         rows: list = []
@@ -47,6 +56,8 @@ def mock_plugins(request):
 
     for name, cls, reg in [
         ("mock", MockExtractor, registry.extractors),
+        ("mock_local", LocalExtractor, registry.extractors),
+        ("cache_probe", CacheProbeSink, registry.sinks),
         ("collect", CollectSink, registry.sinks),
         ("failing", FailingSink, registry.sinks),
         ("flaky", FlakySink, registry.sinks),
@@ -56,13 +67,17 @@ def mock_plugins(request):
     return calls
 
 
-def _recipe(sinks, source_cfg=None):
+def _recipe(sinks, source_cfg=None, source="mock"):
     return Recipe(
         name="r1",
         version="v1beta1",
-        source=PluginRecipe("mock", source_cfg or {}),
+        source=PluginRecipe(source, source_cfg or {}),
         sinks=[PluginRecipe(s) for s in sinks],
     )
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def test_validate_collects_errors():
@@ -86,6 +101,28 @@ def test_run_happy_path(spark):
     assert run.record_count == 5
     assert run.sink_records["collect"] == 5
     assert run.duration_ms >= 0
+
+
+def test_local_source_runs_without_cache(spark, mock_plugins):
+    # a LocalRelation frame is counted and sunk in place: never persisted
+    before = _persistent_rdds(spark)
+    mock_plugins["cache_seen"].clear()
+    run = Agent(spark).run(_recipe(["cache_probe", "collect"], source="mock_local"))
+    assert run.success and run.error is None
+    assert run.record_count == 2 and run.sink_records["collect"] == 2
+    assert mock_plugins["cache_seen"] == [(False, before)]
+    assert _persistent_rdds(spark) == before
+
+
+def test_non_local_source_persists_for_sinks_then_releases(spark, mock_plugins):
+    # any other frame is cached before fan-out and released after the run
+    before = _persistent_rdds(spark)
+    mock_plugins["cache_seen"].clear()
+    run = Agent(spark).run(_recipe(["cache_probe", "collect"], {"n": 4}))
+    assert run.success and run.error is None
+    assert run.record_count == 4 and run.sink_records["collect"] == 4
+    assert mock_plugins["cache_seen"] == [(True, before + 1)]
+    assert _persistent_rdds(spark) == before
 
 
 def test_sink_failure_logged_not_fatal(spark):

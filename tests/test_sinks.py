@@ -154,3 +154,31 @@ def test_json_lines_match_tojson(spark):
     assert list(json.loads(line)["properties"]["labels"]) == [
         k for (k,) in wide.selectExpr("explode(map_keys(properties.labels))").collect()
     ]
+
+
+def test_json_lines_job_count_by_frame_kind(spark):
+    from meteor_spark.sinks.file import json_lines
+    from meteor_spark.sources.base import assets_df
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    local = assets_df(spark, [{"asset_type": "Table"}, {"asset_type": "Topic"}])
+    first = dag.nextJobId()
+    assert [json.loads(line) for line in json_lines(local)] == [{"asset_type": "Table"}, {"asset_type": "Topic"}]
+    assert dag.nextJobId() == first  # LocalTableScanExec: collect() on the driver
+    spread = spark.range(0, 6, numPartitions=3)
+    assert [json.loads(line)["id"] for line in json_lines(spread)] == list(range(6))
+    assert dag.nextJobId() - first == 3  # toLocalIterator: one job per partition
+
+
+def test_console_sink_local_frame_runs_no_job(spark, capsys):
+    from meteor_spark.sources.base import assets_df
+
+    sink = registry.sinks.get("console")
+    sink.init({"max_rows": 2})
+    df = assets_df(spark, [{"asset_type": t} for t in ("Table", "Topic", "Job")])
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    assert sink.sink(df) == 2  # capped at max_rows
+    assert dag.nextJobId() == first
+    lines = capsys.readouterr().out.splitlines()
+    assert [json.loads(line) for line in lines] == [{"asset_type": "Table"}, {"asset_type": "Topic"}]

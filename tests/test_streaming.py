@@ -527,3 +527,25 @@ def test_streaming_ks_drift_equals_batch(spark, sf_dir):
     stream = QUERIES["streaming_ks_drift"](spark, sf_dir)
     batch = QUERIES["event_value_ks_drift"](spark, sf_dir)
     assert sorted(map(tuple, stream.collect())) == sorted(map(tuple, batch.collect()))
+
+
+def test_stream_events_resniffs_rewritten_fixture(spark, tmp_path):
+    """The footer-schema memo is keyed on the file's mtime and size: a
+    fixture rewritten in the same session with another timestamp
+    physical type (timestamp[us] -> nanos-as-long) streams with its new
+    schema, not the memoized one."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stamps = [dt.datetime(2024, 1, 1, h) for h in range(3)]
+    ids = pa.array(range(3), pa.int64())
+    path = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"event_id": ids, "ts": pa.array(stamps, pa.timestamp("us"))}), path)
+    stream_events(spark, str(tmp_path))  # memoizes the timestamp[us] schema
+    nanos = [int(s.replace(tzinfo=dt.timezone.utc).timestamp()) * 10**9 for s in stamps]
+    pq.write_table(pa.table({"event_id": ids, "ts": pa.array(nanos, pa.int64())}), path)
+    out = run_stream_to_batch(stream_events(spark, str(tmp_path)), output_mode="append")
+    got = sorted(r[0] for r in out.selectExpr("cast(ts as string)").collect())
+    assert got == [str(s) for s in stamps]  # session time zone is UTC
