@@ -1,38 +1,59 @@
-"""IO helpers: fixture-tolerant parquet reading, plus the two write-side
+"""IO helpers: fixture-tolerant parquet reading, the two write-side
 levers that matter at 100 TB — bucketing (shuffle-free co-located joins)
-and partitioned layout (partition pruning at the scan).
+and partitioned layout (partition pruning at the scan) — and the one
+mechanism for cache lifetimes.
+
+Cache lifetimes: every persist in the package is `cached(df)`, which
+registers the frame with the innermost open `cache_scope()`; the scope
+unpersists everything registered inside it when it exits, on an
+exception too. A scope belongs to the code that consumes the result:
+`Agent.run` opens one around extract -> processors -> sinks, and an
+operator whose result no longer reads its caches (collected,
+localCheckpointed or written before it returns) opens its own. An
+operator with a lazy result just calls `cached` and leaves the release
+to its caller's scope. Outside any scope `cached` is a plain persist
+that lives until the caller unpersists it or clears the cache. A scope
+covers only the thread that opened it (a contextvar): a frame cached
+from a worker thread or a foreachBatch callback registers with a scope
+opened in that thread, or with none.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-# When True (always, outside plan tests), finish_and_release
-# materializes operator results so per-call persisted intermediates can
-# be unpersisted before returning. Plan tests flip it off to inspect
-# the full physical plan of the lazy result.
-EAGER_CACHE_RELEASE = True
+_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("cache_scope", default=None)
 
 
-def finish_and_release(result: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Materialize a SMALL result frame (localCheckpoint) and unpersist
-    the persisted intermediates that fed it. Operators whose return
-    value is lazy cannot unpersist a cache the caller's collect still
-    needs — but a bare persist outlives the call and accumulates
-    executor storage across long parity/bench sessions (r8 advisory).
-    Eagerly checkpointing the result (always group/pair/report-sized at
-    the call sites) releases the big cache at a bounded storage cost.
-    """
-    if not EAGER_CACHE_RELEASE:
-        return result
+@contextmanager
+def cache_scope() -> Iterator[None]:
+    """Unpersist every frame `cached` inside this block on exit, newest
+    first (a dependent cache goes before the cache it reads). Scopes
+    nest; an inner scope releases only its own frames."""
+    frames: list[DataFrame] = []
+    token = _SCOPE.set(frames)
     try:
-        return result.localCheckpoint(eager=True)
+        yield
     finally:
-        for c in caches:
-            c.unpersist()
+        _SCOPE.reset(token)
+        for df in reversed(frames):
+            df.unpersist()
+
+
+def cached(df: DataFrame) -> DataFrame:
+    """Persist `df` at the default storage level and register it with the
+    innermost open cache_scope."""
+    df = df.persist()
+    frames = _SCOPE.get()
+    if frames is not None:
+        frames.append(df)
+    return df
 
 
 def read_parquet_table(spark: SparkSession, path: str, ts_cols: tuple[str, ...] = ("ts",)) -> DataFrame:

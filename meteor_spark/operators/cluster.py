@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import cache_scope, cached
+
 
 def connected_components(
     pairs: DataFrame, src: str = "a", dst: str = "b", max_iter: int = 25
@@ -46,65 +48,64 @@ def connected_components(
     engine-independent. Only nodes that appear in at least one edge are
     returned (singletons carry no dedup decision).
     """
-    edges = (
-        pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .distinct()
-        .persist()
-    )
-    # round 1 fused into initialization: label(v) = min(v, min neighbors)
-    # is one aggregation over the symmetric edge list — no join needed
-    labels = (
-        edges.groupBy("s")
-        .agg(F.least(F.first("s"), F.min("d")).alias("label"))
-        .select(F.col("s").alias("node"), "label")
-        .localCheckpoint(eager=False)  # materialized by the sum() below
-    )
-    # convergence witness: the EXACT count of labels that changed this
-    # round, carried through the round's own projections so the one
-    # materializing action per round also tests convergence. (An earlier
-    # sum-of-labels witness was numeric-only: F.sum over STRING node ids
-    # is NULL, NULL == NULL exited after one round, and components
-    # silently split. Equality on the carried old label is type-agnostic
-    # and exact — no checksum collision risk.)
-    labels = labels.localCheckpoint(eager=False)
-
-    for _ in range(max_iter):
-        # min label among neighbors, one shuffle on node ids
-        nbr = (
-            edges.join(labels.withColumnRenamed("node", "d2"), edges.d == F.col("d2"))
-            .groupBy("s")
-            .agg(F.min("label").alias("nbr_label"))
+    with cache_scope():
+        edges = cached(
+            pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+            .union(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+            .distinct()
         )
-        propagated = labels.join(nbr.withColumnRenamed("s", "node"), "node", "left").select(
-            "node",
-            F.col("label").alias("__old"),
-            F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
-        )
-        # pointer jumping: chase one indirection (label's own label) in the
-        # same round. Labels are node ids, so this is a self-join of the
-        # label table; combined with propagation it halves remaining path
-        # length every round -> O(log diameter) rounds total.
-        hop = propagated.select(F.col("node").alias("pj_n"), F.col("label").alias("pj_l"))
+        # round 1 fused into initialization: label(v) = min(v, min neighbors)
+        # is one aggregation over the symmetric edge list — no join needed
         labels = (
-            propagated.join(hop, propagated.label == F.col("pj_n"), "left")
-            .select(
-                "node",
-                "__old",
-                F.least("label", F.coalesce("pj_l", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)  # one job per round: the changed-count
-            # action both materializes the checkpoint and tests convergence
+            edges.groupBy("s")
+            .agg(F.least(F.first("s"), F.min("d")).alias("label"))
+            .select(F.col("s").alias("node"), "label")
+            .localCheckpoint(eager=False)  # materialized by the sum() below
         )
-        changed = labels.agg(
-            F.sum(F.when(F.col("label") != F.col("__old"), 1).otherwise(0))
-        ).first()[0]
-        labels = labels.select("node", "label")
-        if not changed:
-            break
+        # convergence witness: the EXACT count of labels that changed this
+        # round, carried through the round's own projections so the one
+        # materializing action per round also tests convergence. (An earlier
+        # sum-of-labels witness was numeric-only: F.sum over STRING node ids
+        # is NULL, NULL == NULL exited after one round, and components
+        # silently split. Equality on the carried old label is type-agnostic
+        # and exact — no checksum collision risk.)
+        labels = labels.localCheckpoint(eager=False)
 
-    edges.unpersist()
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
+        for _ in range(max_iter):
+            # min label among neighbors, one shuffle on node ids
+            nbr = (
+                edges.join(labels.withColumnRenamed("node", "d2"), edges.d == F.col("d2"))
+                .groupBy("s")
+                .agg(F.min("label").alias("nbr_label"))
+            )
+            propagated = labels.join(nbr.withColumnRenamed("s", "node"), "node", "left").select(
+                "node",
+                F.col("label").alias("__old"),
+                F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
+            )
+            # pointer jumping: chase one indirection (label's own label) in the
+            # same round. Labels are node ids, so this is a self-join of the
+            # label table; combined with propagation it halves remaining path
+            # length every round -> O(log diameter) rounds total.
+            hop = propagated.select(F.col("node").alias("pj_n"), F.col("label").alias("pj_l"))
+            labels = (
+                propagated.join(hop, propagated.label == F.col("pj_n"), "left")
+                .select(
+                    "node",
+                    "__old",
+                    F.least("label", F.coalesce("pj_l", "label")).alias("label"),
+                )
+                .localCheckpoint(eager=False)  # one job per round: the changed-count
+                # action both materializes the checkpoint and tests convergence
+            )
+            changed = labels.agg(
+                F.sum(F.when(F.col("label") != F.col("__old"), 1).otherwise(0))
+            ).first()[0]
+            labels = labels.select("node", "label")
+            if not changed:
+                break
+
+        return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
 
 
 def survivors_from_labels(df: DataFrame, labels: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import cache_scope, cached
+
 
 def pagerank(
     edges: DataFrame,
@@ -46,65 +48,60 @@ def pagerank(
     e_raw = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"), F.col(weight_col).alias("w")
     )
-    nodes = (
-        e_raw.select(F.col("src").alias("node"))
-        .union(e_raw.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:  # empty graph: empty result, not a 1/N division blow-up
-        return nodes.select(
-            "node", F.lit(None).cast("double").alias("pagerank")
+    with cache_scope():
+        nodes = cached(
+            e_raw.select(F.col("src").alias("node"))
+            .union(e_raw.select(F.col("dst").alias("node")))
+            .distinct()
         )
-    wout = e_raw.groupBy("src").agg(F.sum("w").cast("double").alias("wout"))
-    e = (
-        e_raw.join(wout, "src")
-        .select("src", "dst", (F.col("w") / F.col("wout")).alias("p"))
-        .persist()
-    )
-    pr = nodes.select("node", F.round(F.lit(1.0) / n, iter_round).alias("pr"))
-    for i in range(iters):
-        contrib = (
-            e.join(pr, e["src"] == pr["node"])
-            .select(F.col("dst").alias("node"), (F.col("pr") * F.col("p")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        pr = (
-            nodes.join(contrib, "node", "left")
-            .na.fill({"s": 0.0})
-            .select(
-                "node",
-                F.round(
-                    F.lit((1.0 - damping) / n) + damping * F.col("s"), iter_round
-                ).alias("pr"),
+        n = nodes.count()
+        if n == 0:  # empty graph: empty result, not a 1/N division blow-up
+            return nodes.select(
+                "node", F.lit(None).cast("double").alias("pagerank")
             )
+        wout = e_raw.groupBy("src").agg(F.sum("w").cast("double").alias("wout"))
+        e = cached(
+            e_raw.join(wout, "src")
+            .select("src", "dst", (F.col("w") / F.col("wout")).alias("p"))
         )
-        # Truncate lineage EVERY iteration (the r11 cadence, restored in
-        # r13): the r12 every-2nd-iteration variant looked ~1s faster in
-        # one container's steady-state probes, but the driver measured
-        # it SLOWER at both 32 and 8 cores (2.07 -> 3.02/2.72s), and an
-        # r13 interleaved same-JVM A/B agrees (median 3.99s vs 15.08s,
-        # min 2.88 vs 3.24 across 6 alternating rounds incl. noise
-        # storms): the deeper 2-join plans cost more in per-action
-        # analysis/codegen than the skipped checkpoint jobs save. The
-        # final iteration's checkpoint also keeps the returned frame a
-        # cheap checkpointed scan (consumers may run several actions),
-        # lets the nodes/e caches below be released with nothing left
-        # referencing them, and keeps the cold plan free of the
-        # stats-less SortMergeJoins an unpersisted tail would show
-        # (tests/test_plans.py pins (1, 0, 0)). Unbounded chains (no
-        # checkpoint at all) are not an option at scale: lineage depth
-        # grows linearly in iters and re-planning cost with it.
-        pr = pr.localCheckpoint()
-    # the final localCheckpoint cut pr's lineage from nodes/e, so the
-    # caches can be released instead of leaking for the session
-    nodes.unpersist()
-    e.unpersist()
-    return pr.select("node", F.round("pr", round_to).alias("pagerank")).orderBy(
-        F.col("pagerank").desc(), "node"
-    )
+        pr = nodes.select("node", F.round(F.lit(1.0) / n, iter_round).alias("pr"))
+        for i in range(iters):
+            contrib = (
+                e.join(pr, e["src"] == pr["node"])
+                .select(F.col("dst").alias("node"), (F.col("pr") * F.col("p")).alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").alias("s"))
+            )
+            pr = (
+                nodes.join(contrib, "node", "left")
+                .na.fill({"s": 0.0})
+                .select(
+                    "node",
+                    F.round(
+                        F.lit((1.0 - damping) / n) + damping * F.col("s"), iter_round
+                    ).alias("pr"),
+                )
+            )
+            # Truncate lineage EVERY iteration (the r11 cadence, restored in
+            # r13): the r12 every-2nd-iteration variant looked ~1s faster in
+            # one container's steady-state probes, but the driver measured
+            # it SLOWER at both 32 and 8 cores (2.07 -> 3.02/2.72s), and an
+            # r13 interleaved same-JVM A/B agrees (median 3.99s vs 15.08s,
+            # min 2.88 vs 3.24 across 6 alternating rounds incl. noise
+            # storms): the deeper 2-join plans cost more in per-action
+            # analysis/codegen than the skipped checkpoint jobs save. The
+            # final iteration's checkpoint also keeps the returned frame a
+            # cheap checkpointed scan (consumers may run several actions),
+            # lets the scope release the nodes/e caches with nothing left
+            # referencing them, and keeps the cold plan free of the
+            # stats-less SortMergeJoins an unpersisted tail would show
+            # (tests/test_plans.py pins (1, 0, 0)). Unbounded chains (no
+            # checkpoint at all) are not an option at scale: lineage depth
+            # grows linearly in iters and re-planning cost with it.
+            pr = pr.localCheckpoint()
+        return pr.select("node", F.round("pr", round_to).alias("pagerank")).orderBy(
+            F.col("pagerank").desc(), "node"
+        )
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:

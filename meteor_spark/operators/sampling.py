@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import cached
+
 BUCKETS = 10_000
 
 
@@ -226,7 +228,7 @@ def dsir_log_weights(
     # exchange reuse can't collapse them — without the cache the corpus
     # tokenize+explode+groupBy runs up to 3x per action (the same
     # two-consumer shape skew.key_skew_report persists for)
-    m = tok.groupBy(id_col, "__is_target", "bkt").agg(F.count("*").alias("m")).persist()
+    m = cached(tok.groupBy(id_col, "__is_target", "bkt").agg(F.count("*").alias("m")))
 
     raw = m.groupBy("bkt").agg(F.sum("m").alias("cr"))
     tgt = m.filter(F.col("__is_target")).groupBy("bkt").agg(F.sum("m").alias("ct"))

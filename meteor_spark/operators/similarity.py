@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from meteor_spark.io import cache_scope, cached
+
 
 def _sql_double(x: float) -> str:
     """Render one double as an exact SQL literal. Python's repr emits the
@@ -207,11 +209,12 @@ def ivf_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    corpus_v = corpus.select(
+    # KMeans makes one pass per iteration; never re-read parquet
+    corpus_v = cached(corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ).persist()  # KMeans makes one pass per iteration; never re-read parquet
+    ))
     # random init (seeded, deterministic) skips the k-means|| init jobs;
     # quantizer cells only need to be roughly balanced, not optimal, so a
     # short iteration budget is plenty
@@ -579,11 +582,11 @@ def embedding_near_duplicates(
         dim = len(df.select(vec_col).first()[0])
     # persist: both sides of the self-join would otherwise recompute the
     # bits*dim-term signature expression from raw vectors
-    sigs = df.select(
+    sigs = cached(df.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("v"),
         srp_signature(F.col(vec_col), dim, bits).alias("sig"),
-    ).withColumn("nv", norm(F.col("v"))).persist()
+    ).withColumn("nv", norm(F.col("v"))))
     l, r = sigs.alias("l"), sigs.alias("r")
     return (
         l.join(r, "sig")
@@ -1027,11 +1030,11 @@ def ivf_write_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    corpus_v = corpus.select(
+    corpus_v = cached(corpus.select(
         F.col(id_col),
         F.col(vec_col),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ).persist()
+    ))
     model = KMeans(
         k=n_cells, seed=seed, featuresCol="features", predictionCol="cell", initMode="random", maxIter=5
     ).fit(corpus_v)
@@ -1144,7 +1147,7 @@ def kmeans_fit(
     """
     # every iteration re-scans the vectors: persist once (at 100 TB this
     # is THE difference between iters x full-table reads and one read)
-    base = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")).persist()
+    base = cached(df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")))
     cents = [
         [float(x) for x in r[0]]
         for r in base.orderBy(id_col).limit(k).select("v").collect()
@@ -1532,48 +1535,46 @@ def power_iteration_pc1(
     )
     # NULL vectors carry no direction information; dropping them also
     # keeps the dim probe below from landing on a NULL row
-    base = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), xm.alias("xm"))
-        .persist()
-    )
-    first = base.select(F.size("xm").alias("d")).first()
-    if first is None:
-        return df.sparkSession.createDataFrame([], "dim long, pc1_fixed long")
-    n_dim = first["d"]
-    v = [10_000] * n_dim
+    with cache_scope():
+        base = cached(
+            df.filter(F.col(vec_col).isNotNull()).select(F.col(id_col), xm.alias("xm"))
+        )
+        first = base.select(F.size("xm").alias("d")).first()
+        if first is None:
+            return df.sparkSession.createDataFrame([], "dim long, pc1_fixed long")
+        n_dim = first["d"]
+        v = [10_000] * n_dim
 
-    for _ in range(iters):
-        varr = lit_long_array(v)
-        dot = F.aggregate(
-            F.zip_with("xm", varr, lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, y: acc + y,
-        )
-        s_rows = (
-            base.withColumn("dot", dot)
-            .select(F.posexplode("xm").alias("dim", "xval"), "dot")
-            .groupBy("dim")
-            .agg(F.sum(F.col("xval") * F.col("dot")).alias("s"))
-            .collect()
-        )
-        s = [0] * n_dim
-        for r in s_rows:
-            s[r["dim"]] = r["s"]
-        # deterministic sign: component with the largest |s| (ties ->
-        # lowest dim) must be positive; all-integer comparisons
-        lead = min(range(n_dim), key=lambda d: (-abs(s[d]), d))
-        sgn = -1 if s[lead] < 0 else 1
-        mx = abs(s[lead])
-        if mx == 0:
-            v = [0] * n_dim
-            break
-        # magnitude-only division (floor vs trunc agree on non-negatives)
-        v = [
-            (-1 if sd * sgn < 0 else 1) * ((abs(sd) * 10_000) // mx)
-            for sd in s
-        ]
-    base.unpersist()
+        for _ in range(iters):
+            varr = lit_long_array(v)
+            dot = F.aggregate(
+                F.zip_with("xm", varr, lambda a, b: a * b),
+                F.lit(0).cast("long"),
+                lambda acc, y: acc + y,
+            )
+            s_rows = (
+                base.withColumn("dot", dot)
+                .select(F.posexplode("xm").alias("dim", "xval"), "dot")
+                .groupBy("dim")
+                .agg(F.sum(F.col("xval") * F.col("dot")).alias("s"))
+                .collect()
+            )
+            s = [0] * n_dim
+            for r in s_rows:
+                s[r["dim"]] = r["s"]
+            # deterministic sign: component with the largest |s| (ties ->
+            # lowest dim) must be positive; all-integer comparisons
+            lead = min(range(n_dim), key=lambda d: (-abs(s[d]), d))
+            sgn = -1 if s[lead] < 0 else 1
+            mx = abs(s[lead])
+            if mx == 0:
+                v = [0] * n_dim
+                break
+            # magnitude-only division (floor vs trunc agree on non-negatives)
+            v = [
+                (-1 if sd * sgn < 0 else 1) * ((abs(sd) * 10_000) // mx)
+                for sd in s
+            ]
     return df.sparkSession.createDataFrame(
         [(d, int(v[d])) for d in range(n_dim)], "dim long, pc1_fixed long"
     )
@@ -1678,12 +1679,11 @@ def margin_bitext_mine(
     # per-query mass, target set) — without it the |B| x |Q| broadcast
     # scan re-runs per consumer; persisted it is one pass over B and
     # |Q|*k rows of state
-    fwd = (
+    fwd = cached(
         b.join(F.broadcast(q), F.lit(True))
         .select("src_id", "tgt_id", c4("qv", "qv_n", "bv", "bv_n").alias("c4"))
         .withColumn("r", F.row_number().over(wq))
         .filter(F.col("r") <= k)
-        .persist()
     )
     fwd_sum = fwd.groupBy("src_id").agg(F.sum("c4").alias("sum_fwd"))
 
@@ -1715,14 +1715,8 @@ def margin_bitext_mine(
     wbest = Window.partitionBy("src_id").orderBy(
         F.col("margin_ppm").desc(), F.col("tgt_id")
     )
-    result = (
+    return (
         scored.withColumn("best", F.row_number().over(wbest))
         .filter(F.col("best") == 1)
         .select("src_id", "tgt_id", F.col("c4").alias("cos_e4"), "margin_ppm")
     )
-    # materialize the (|Q|-row) result so fwd's cache can be released
-    # before returning — a bare persist here outlives the call and
-    # accumulates executor storage across long parity/bench sessions
-    from meteor_spark.io import finish_and_release
-
-    return finish_and_release(result, fwd)

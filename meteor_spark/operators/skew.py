@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import cached
+
 
 def salted_agg(
     df: DataFrame,
@@ -96,7 +98,7 @@ def key_skew_report(
     summary and the top-k: without it each branch re-scans the input
     (one row per distinct key — small next to the facts).
     """
-    counts = df.groupBy(*keys).agg(F.count("*").alias("n")).persist()
+    counts = cached(df.groupBy(*keys).agg(F.count("*").alias("n")))
     totals = counts.agg(
         F.sum("n").alias("__total"), F.count("*").alias("__n_keys")
     )

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from meteor_spark.io import cached
+
 # Tiny per-language stopword lists for the n-gram/stopword language ID
 # heuristic. Order = tie-break priority (first wins on equal scores).
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -685,7 +687,7 @@ def bigram_lm_perplexity(
     # probability lookup join; persist it once (it is the compact
     # distinct-bigrams-per-doc form, far smaller than the token stream)
     # so the corpus is tokenized a single time
-    tf = bg.groupBy(id_col, "w1", "w2").agg(F.count("*").alias("m")).persist()
+    tf = cached(bg.groupBy(id_col, "w1", "w2").agg(F.count("*").alias("m")))
     bgc = tf.groupBy("w1", "w2").agg(F.sum("m").alias("c12"))
     ctx = bgc.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = worded.select(F.explode("__ws").alias("w")).agg(
@@ -734,11 +736,10 @@ def source_overlap_matrix(
     sources first — boilerplate that carries no provenance signal).
     """
     fps = winnow_fingerprints(df, k=k, window=window, text_col=text_col, id_col=id_col)
-    sfp = (
+    sfp = cached(
         fps.join(df.select(id_col, group_col), id_col)
         .select(group_col, "fp")
         .distinct()
-        .persist()
     )
     cnt = sfp.groupBy(group_col).agg(F.count("*").alias("n"))
     a = sfp.select(F.col(group_col).alias("source_a"), "fp")

@@ -27,6 +27,7 @@ import meteor_spark.sources  # noqa: F401 — registers source plugins used by c
 from meteor_spark.operators import dedup, drift, sampling, similarity, text, usage
 from meteor_spark.operators.profile import profile_df
 from meteor_spark.functions import sqlparser, unix_us
+from meteor_spark.io import cache_scope, cached
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -107,15 +108,17 @@ def _fp_lift(col: Column, scale: int = 100) -> Column:
     return (col * scale + F.lit(0.5)).cast("long")
 
 
-# Session-scoped shared intermediates: the minhash-LSH verified-pairs
-# frame and its connected-components labels feed THREE gate queries
-# (pairs report, cluster report, survivor dedup). Materializing each once
-# per (session, sf_dir) — persist for pairs, localCheckpoint for labels —
-# is the DataFrame analogue of a shared CTE across a workload: on a real
-# cluster the dedup pipeline computes the closure exactly once and every
-# downstream consumer reads the materialized result. Deterministic, so
-# reuse can never change answers; keyed by applicationId so a fresh
-# session never sees stale state.
+# Shared intermediates: the minhash-LSH verified-pairs frame and its
+# connected-components labels feed THREE gate queries (pairs report,
+# cluster report, survivor dedup). Building each once per (session,
+# sf_dir) is the DataFrame analogue of a shared CTE across a workload:
+# on a real cluster the dedup pipeline computes the closure exactly once
+# and every downstream consumer reads the materialized result. A
+# `cached` frame here (pairs) stays persisted until the caller's
+# cache_scope ends; after that the memo still holds it and a later gate
+# recomputes it from its plan. A localCheckpointed frame (labels) lives
+# for the session. Deterministic, so reuse can never change answers;
+# keyed by applicationId so a fresh session never sees stale state.
 _SHARED: dict[tuple, DataFrame] = {}
 
 
@@ -2206,9 +2209,7 @@ def _bpe_word_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "bpe_word_tok20",
-        lambda: word_subword_counts(
-            _docs(spark, sf_dir), _bpe_rules(spark, sf_dir)
-        ).persist(),
+        lambda: cached(word_subword_counts(_docs(spark, sf_dir), _bpe_rules(spark, sf_dir))),
     )
 
 
@@ -2511,13 +2512,13 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "minhash_pairs",
-        lambda: dedup.minhash_near_duplicates(
+        lambda: cached(dedup.minhash_near_duplicates(
             _docs(spark, sf_dir),
             k=_MINHASH_K,
             num_hashes=_MINHASH_HASHES,
             bands=_MINHASH_BANDS,
             threshold=0.5,
-        ).persist(),
+        )),
     )
 
 
@@ -2676,9 +2677,9 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dedup.shingle_frame(docs, "text", "doc_id", _NGRAM_K, extra_cols=("lang", "source"))
     # both sides of the self-join read the postings; persist so the
     # corpus is shingled once, not once per side
-    toks = sh.select(
+    toks = cached(sh.select(
         "doc_id", "lang", "source", F.size("sh").alias("sz"), F.explode("sh").alias("gram")
-    ).persist()
+    ))
     a, b = toks.alias("a"), toks.alias("b")
     inter = (
         a.join(
@@ -2737,9 +2738,7 @@ def _prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "prefix_pairs",
-        lambda: dedup.prefix_filter_jaccard_pairs(
-            _docs(spark, sf_dir), threshold=0.5
-        ).persist(),
+        lambda: cached(dedup.prefix_filter_jaccard_pairs(_docs(spark, sf_dir), threshold=0.5)),
     )
 
 
@@ -2751,9 +2750,7 @@ def _true_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "true_pairs",
-        lambda: dedup.exact_jaccard_pairs_blocked(
-            _docs(spark, sf_dir), threshold=0.5
-        ).persist(),
+        lambda: cached(dedup.exact_jaccard_pairs_blocked(_docs(spark, sf_dir), threshold=0.5)),
     )
 
 
@@ -3192,7 +3189,7 @@ def _semdedup_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(_SEMDEDUP_PLANT)
             .select((F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"), "embedding", "label")
         )
-        return similarity.semantic_assign(emb.unionByName(planted), n_clusters=_SEMDEDUP_K).persist()
+        return cached(similarity.semantic_assign(emb.unionByName(planted), n_clusters=_SEMDEDUP_K))
 
     return _shared(spark, sf_dir, "semdedup_assigned", build)
 
@@ -4199,7 +4196,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = ann.filter((F.col("lang_guess") == "en") & (F.col("quality") >= 0.55))
     surv = kept.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    kept = kept.join(surv, ["fp", "doc_id"], "left_semi").persist()
+    kept = cached(kept.join(surv, ["fp", "doc_id"], "left_semi"))
     chunks = text.chunk_documents(kept, chunk_size=_CHUNK_SIZE, overlap=_CHUNK_OVERLAP)
     per_doc = chunks.groupBy("doc_id").agg(
         F.count("*").alias("n_chunks"), F.sum("n_tokens").alias("n_chunk_tokens")
@@ -4474,19 +4471,19 @@ def neardup_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _session_tmpdir("msk_cmp_")
     store = os.path.join(base, "store")
 
-    csh = shingle_frame(corpus, "text", "doc_id", _MINHASH_K).persist()
-    csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(
-        f"{store}/shingles"
-    )
-    minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
-    csh.unpersist()
-    bsh = shingle_frame(batch, "text", "doc_id", _MINHASH_K).persist()
-    for _ in range(2):  # at-least-once: same survivors appended twice
-        bsh.withColumn("__corpus", F.lit(False)).write.mode("append").parquet(
+    with cache_scope():
+        csh = cached(shingle_frame(corpus, "text", "doc_id", _MINHASH_K))
+        csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(
             f"{store}/shingles"
         )
-        minhash_bands(batch, sh_df=bsh).write.mode("append").parquet(f"{store}/bands")
-    bsh.unpersist()
+        minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
+    with cache_scope():
+        bsh = cached(shingle_frame(batch, "text", "doc_id", _MINHASH_K))
+        for _ in range(2):  # at-least-once: same survivors appended twice
+            bsh.withColumn("__corpus", F.lit(False)).write.mode("append").parquet(
+                f"{store}/shingles"
+            )
+            minhash_bands(batch, sh_df=bsh).write.mode("append").parquet(f"{store}/bands")
 
     compact_neardup_store(spark, store)
     return (
@@ -9378,16 +9375,8 @@ def source_overlap_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w"),
     )
-    partials = sketches.hll64_partials(toks, ["source"], "w", lg_k=_HLL64_LGK).persist()
-    # materialize the (source-pair-sized) result, then release the
-    # register cache — a bare persist outlives the gate and accumulates
-    # executor storage across long parity/bench sessions
-    from meteor_spark.io import finish_and_release
-
-    return finish_and_release(
-        sketches.hll_pairwise_overlap(partials, "source", lg_k=_HLL64_LGK),
-        partials,
-    )
+    partials = cached(sketches.hll64_partials(toks, ["source"], "w", lg_k=_HLL64_LGK))
+    return sketches.hll_pairwise_overlap(partials, "source", lg_k=_HLL64_LGK)
 
 
 @query(

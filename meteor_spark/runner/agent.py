@@ -25,11 +25,16 @@ Spark-first divergences (SURVEY.md §4 — deliberate):
     at optimization. While the frame is local (sources.base.is_local)
     the record count and the driver-side sinks' shared to_json pass
     (sinks.file.json_lines) read the rows in place: no cache, no job.
-  - Any other frame is persisted before fan-out, so each sink re-reads
-    the cache instead of re-running the extractor — the analogue of the
-    reference's per-subscriber channels fed by one extraction pass
-    (agent/stream.go:51-103). Its record count is df.count() on the
-    cache, and json_lines streams it one job per partition.
+  - Any other frame is cached (io.cached) before fan-out, so each sink
+    re-reads the cache instead of re-running the extractor — the
+    analogue of the reference's per-subscriber channels fed by one
+    extraction pass (agent/stream.go:51-103). Its record count is
+    df.count() on the cache, and json_lines streams it one job per
+    partition.
+  - One run owns one io.cache_scope around extract -> processors ->
+    sinks, as the reference's stream closes when its run ends: every
+    frame the extractor, a processor or the runner caches is released
+    when the run returns, on failure and cancellation too.
 """
 
 from __future__ import annotations
@@ -43,6 +48,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from meteor_spark import registry
+from meteor_spark.io import cache_scope, cached
 from meteor_spark.plugins_base import InvalidConfigError
 from meteor_spark.recipe import Recipe
 from meteor_spark.runner import retrier
@@ -105,53 +111,54 @@ class Agent:
                     log.exception("monitor failed")
             return report
         started = time.monotonic()
-        df: DataFrame | None = None
         try:
-            extractor = registry.extractors.get(recipe.source.name)
-            extractor.init(recipe.source.config)
-            procs = []
-            for p in recipe.processors:
-                proc = registry.processors.get(p.name)
-                proc.init(p.config)
-                procs.append(proc)
-            sink_instances = []
-            for s in recipe.sinks:
-                sink = registry.sinks.get(s.name)
-                sink.init(s.config)
-                sink_instances.append((s.name, sink))
+            with cache_scope():
+                extractor = registry.extractors.get(recipe.source.name)
+                extractor.init(recipe.source.config)
+                procs = []
+                for p in recipe.processors:
+                    proc = registry.processors.get(p.name)
+                    proc.init(p.config)
+                    procs.append(proc)
+                sink_instances = []
+                for s in recipe.sinks:
+                    sink = registry.sinks.get(s.name)
+                    sink.init(s.config)
+                    sink_instances.append((s.name, sink))
 
-            df = extractor.extract(self.spark)
-            for proc in procs:
-                df = proc.process(df)
+                df = extractor.extract(self.spark)
+                for proc in procs:
+                    df = proc.process(df)
 
-            # record-count middleware (agent.go:153-157), then one action
-            # per sink (agent/stream.go:92-103). A frame not already on the
-            # driver is cached first, or each action re-runs the pipeline
-            if is_local(df):
-                report.record_count = len(df.select().collect())
-            else:
-                df = df.persist()
-                report.record_count = df.count()
+                # record-count middleware (agent.go:153-157), then one
+                # action per sink (agent/stream.go:92-103). A frame not
+                # already on the driver is cached first, or each action
+                # re-runs the pipeline
+                if is_local(df):
+                    report.record_count = len(df.select().collect())
+                else:
+                    df = cached(df)
+                    report.record_count = df.count()
 
-            sink_errors: list[str] = []
-            for name, sink in sink_instances:
-                try:
-                    written = retrier.retry(
-                        lambda s=sink: s.sink(df),
-                        max_retries=self.max_retries,
-                        initial_interval_s=self.retry_initial_interval_s,
-                    )
-                    report.sink_records[name] = written if written is not None else report.record_count
-                except Exception as e:  # noqa: BLE001 — sink failure policy below
-                    if self.stop_on_sink_error:
-                        raise
-                    log.error("sink %s failed (continuing): %s", name, e)
-                    sink_errors.append(f"{name}: {e}")
-                finally:
-                    sink.close()
-            report.success = True
-            if sink_errors:
-                report.error = "; ".join(sink_errors)
+                sink_errors: list[str] = []
+                for name, sink in sink_instances:
+                    try:
+                        written = retrier.retry(
+                            lambda s=sink: s.sink(df),
+                            max_retries=self.max_retries,
+                            initial_interval_s=self.retry_initial_interval_s,
+                        )
+                        report.sink_records[name] = written if written is not None else report.record_count
+                    except Exception as e:  # noqa: BLE001 — sink failure policy below
+                        if self.stop_on_sink_error:
+                            raise
+                        log.error("sink %s failed (continuing): %s", name, e)
+                        sink_errors.append(f"{name}: {e}")
+                    finally:
+                        sink.close()
+                report.success = True
+                if sink_errors:
+                    report.error = "; ".join(sink_errors)
         except Exception as e:  # noqa: BLE001 — report-shaped error handling
             report.error = str(e)
             report.success = False
@@ -164,8 +171,6 @@ class Agent:
             if self._cancelled:
                 report.success = False
                 report.error = report.error or "cancelled"
-            if df is not None and df.is_cached:
-                df.unpersist()
             report.duration_ms = int((time.monotonic() - started) * 1000)
             for m in self.monitors:
                 try:

@@ -31,6 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from meteor_spark.io import cache_scope, cached
+
+
 def normalize_ts(raw: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize whatever timestamp flavor the fixture shipped with —
     nanos-as-long (r1), timestamp[us]/TIMESTAMP_NTZ (r2), or a true
@@ -453,21 +456,21 @@ def _compact_dataset(
     rows_before = _footer_rows(in_files)
     if rows_before is None:
         rows_before = df.count()
-    deduped = df.dropDuplicates(key_cols).persist()
-    expect = deduped.count()
-    if prefix_col is not None:
-        plen = 2 if expect > 100_000 else 1
-        pcol = f"pfx{plen}"
-        (
-            deduped.withColumn(pcol, F.substring(prefix_col, 1, plen))
-            .repartition(pcol)
-            .write.partitionBy(pcol)
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-    else:
-        deduped.repartitionByRange(n, range_col).write.mode("overwrite").parquet(tmp)
-    deduped.unpersist()
+    with cache_scope():
+        deduped = cached(df.dropDuplicates(key_cols))
+        expect = deduped.count()
+        if prefix_col is not None:
+            plen = 2 if expect > 100_000 else 1
+            pcol = f"pfx{plen}"
+            (
+                deduped.withColumn(pcol, F.substring(prefix_col, 1, plen))
+                .repartition(pcol)
+                .write.partitionBy(pcol)
+                .mode("overwrite")
+                .parquet(tmp)
+            )
+        else:
+            deduped.repartitionByRange(n, range_col).write.mode("overwrite").parquet(tmp)
     # losslessness gate before the swap: the compacted dir must hold
     # exactly the distinct rows of the live dir (row count from the
     # just-written footers — no extra scan job)
@@ -643,106 +646,106 @@ def incremental_neardup_stream(
     # seed=False continues ingestion on an EXISTING store (e.g. one
     # rewritten by compact_neardup_store) instead of overwriting it.
     if seed:
-        corpus_sh = shingle_frame(corpus, text_col, id_col, k).persist()
-        # the two seed writes are independent jobs over the persisted
-        # shingle frame; overlapping them (guide §2.6) hides the
-        # cheaper write inside the band-hash one. Concurrent first
-        # actions race the cache fill, which at worst computes a
-        # partition twice on otherwise-idle cores.
-        from concurrent.futures import ThreadPoolExecutor
+        with cache_scope():
+            corpus_sh = cached(shingle_frame(corpus, text_col, id_col, k))
+            # the two seed writes are independent jobs over the persisted
+            # shingle frame; overlapping them (guide §2.6) hides the
+            # cheaper write inside the band-hash one. Concurrent first
+            # actions race the cache fill, which at worst computes a
+            # partition twice on otherwise-idle cores.
+            from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            w1 = pool.submit(
-                lambda: corpus_sh.withColumn("__corpus", F.lit(True))
-                .write.mode("overwrite")
-                .parquet(f"{store_dir}/shingles")
-            )
-            w2 = pool.submit(
-                lambda: _bands_of(corpus_sh)
-                .write.mode("overwrite")
-                .parquet(f"{store_dir}/bands")
-            )
-            w1.result(); w2.result()
-        corpus_sh.unpersist()
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                w1 = pool.submit(
+                    lambda: corpus_sh.withColumn("__corpus", F.lit(True))
+                    .write.mode("overwrite")
+                    .parquet(f"{store_dir}/shingles")
+                )
+                w2 = pool.submit(
+                    lambda: _bands_of(corpus_sh)
+                    .write.mode("overwrite")
+                    .parquet(f"{store_dir}/bands")
+                )
+                w1.result(); w2.result()
 
     n_batches = 0
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
         nonlocal n_batches
         n_batches += 1
-        s = batch_df.sparkSession
-        sh_b = shingle_frame(batch_df, text_col, id_col, k).persist()
-        b_b = _bands_of(sh_b).persist()
+        with cache_scope():
+            s = batch_df.sparkSession
+            sh_b = cached(shingle_frame(batch_df, text_col, id_col, k))
+            b_b = cached(_bands_of(sh_b))
 
-        # compacted stores are hive-partitioned by band_key prefix:
-        # prune the candidate scan to the batch's own prefixes, and
-        # remember the layout — appends must match it (plain files at
-        # the root of a partitioned dir break partition discovery)
-        raw_bands = s.read.parquet(f"{store_dir}/bands")
-        store_pcol = _store_pfx_col(raw_bands.columns)
-        store_bands = pruned_store_bands(raw_bands, b_b)
-        store_sh = s.read.parquet(f"{store_dir}/shingles")
+            # compacted stores are hive-partitioned by band_key prefix:
+            # prune the candidate scan to the batch's own prefixes, and
+            # remember the layout — appends must match it (plain files at
+            # the root of a partitioned dir break partition discovery)
+            raw_bands = s.read.parquet(f"{store_dir}/bands")
+            store_pcol = _store_pfx_col(raw_bands.columns)
+            store_bands = pruned_store_bands(raw_bands, b_b)
+            store_sh = s.read.parquet(f"{store_dir}/shingles")
 
-        # batch vs store: band collision -> exact verify
-        cand = (
-            b_b.join(store_bands.withColumnRenamed(id_col, "__old"), ["band", "band_key"])
-            .select(F.col(id_col), "__old")
-            .distinct()
-        )
-        osh = store_sh.select(F.col(id_col).alias("__old"), F.col("sh").alias("osh"))
-        si = F.size(F.array_intersect("sh", "osh"))
-        jac = si.cast("double") / (F.size("sh") + F.size("osh") - si)
-        dup_of_store = (
-            cand.join(sh_b, id_col)
-            .join(osh, "__old")
-            .filter(jac >= threshold)
-            .select(id_col)
-            .distinct()
-        )
+            # batch vs store: band collision -> exact verify
+            cand = (
+                b_b.join(store_bands.withColumnRenamed(id_col, "__old"), ["band", "band_key"])
+                .select(F.col(id_col), "__old")
+                .distinct()
+            )
+            osh = store_sh.select(F.col(id_col).alias("__old"), F.col("sh").alias("osh"))
+            si = F.size(F.array_intersect("sh", "osh"))
+            jac = si.cast("double") / (F.size("sh") + F.size("osh") - si)
+            dup_of_store = (
+                cand.join(sh_b, id_col)
+                .join(osh, "__old")
+                .filter(jac >= threshold)
+                .select(id_col)
+                .distinct()
+            )
 
-        # batch-internal: min-id survivor among near-dup pairs
-        l, r = b_b.alias("l"), b_b.alias("r")
-        pairs = (
-            l.join(r, ["band", "band_key"])
-            .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-            .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-            .distinct()
-        )
-        sa = sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("ash"))
-        sb = sh_b.select(F.col(id_col).alias("b"), F.col("sh").alias("bsh"))
-        si2 = F.size(F.array_intersect("ash", "bsh"))
-        jac2 = si2.cast("double") / (F.size("ash") + F.size("bsh") - si2)
-        dup_in_batch = (
-            pairs.join(sa, "a").join(sb, "b").filter(jac2 >= threshold)
-            .select(F.col("b").alias(id_col))
-            .distinct()
-        )
+            # batch-internal: min-id survivor among near-dup pairs
+            l, r = b_b.alias("l"), b_b.alias("r")
+            pairs = (
+                l.join(r, ["band", "band_key"])
+                .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+                .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
+                .distinct()
+            )
+            sa = sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("ash"))
+            sb = sh_b.select(F.col(id_col).alias("b"), F.col("sh").alias("bsh"))
+            si2 = F.size(F.array_intersect("ash", "bsh"))
+            jac2 = si2.cast("double") / (F.size("ash") + F.size("bsh") - si2)
+            dup_in_batch = (
+                pairs.join(sa, "a").join(sb, "b").filter(jac2 >= threshold)
+                .select(F.col("b").alias(id_col))
+                .distinct()
+            )
 
-        dropped = dup_of_store.unionByName(dup_in_batch).distinct()
-        survivors_sh = sh_b.join(dropped, id_col, "left_anti").persist()
+            dropped = dup_of_store.unionByName(dup_in_batch).distinct()
+            survivors_sh = cached(sh_b.join(dropped, id_col, "left_anti"))
 
-        # the two survivor appends touch disjoint store dirs and both
-        # read the persisted survivor frame — overlap them (§2.6, the
-        # same move as the seed writes)
-        def _append_shingles() -> None:
-            survivors_sh.withColumn("__corpus", F.lit(False)).write.mode(
-                "append"
-            ).parquet(f"{store_dir}/shingles")
+            # the two survivor appends touch disjoint store dirs and both
+            # read the persisted survivor frame — overlap them (§2.6, the
+            # same move as the seed writes)
+            def _append_shingles() -> None:
+                survivors_sh.withColumn("__corpus", F.lit(False)).write.mode(
+                    "append"
+                ).parquet(f"{store_dir}/shingles")
 
-        def _append_bands() -> None:
-            nb = _bands_of(survivors_sh)
-            if store_pcol is not None:
-                _partitioned_append(nb, store_pcol, "band_key", f"{store_dir}/bands")
-            else:
-                nb.write.mode("append").parquet(f"{store_dir}/bands")
+            def _append_bands() -> None:
+                nb = _bands_of(survivors_sh)
+                if store_pcol is not None:
+                    _partitioned_append(nb, store_pcol, "band_key", f"{store_dir}/bands")
+                else:
+                    nb.write.mode("append").parquet(f"{store_dir}/bands")
 
-        from concurrent.futures import ThreadPoolExecutor
+            from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            a1 = pool.submit(_append_shingles)
-            a2 = pool.submit(_append_bands)
-            a1.result(); a2.result()
-        sh_b.unpersist(); b_b.unpersist(); survivors_sh.unpersist()
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                a1 = pool.submit(_append_shingles)
+                a2 = pool.submit(_append_bands)
+                a1.result(); a2.result()
 
     stream = (
         spark.readStream.schema(f"{id_col} long, {text_col} string")

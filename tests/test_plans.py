@@ -465,19 +465,11 @@ def test_plan_budget(spark, name):
     # budgets are COLD-plan counts: shared persisted state left behind
     # by earlier tests swaps subtrees for InMemoryTableScans and shifts
     # join strategies, making the counts order-dependent
-    from meteor_spark import io
     from meteor_spark.queries import _SHARED
 
     _SHARED.clear()
     spark.catalog.clearCache()
-    # keep the lazy plan inspectable: finish_and_release would swap the
-    # whole subtree for a localCheckpoint RDD scan, hiding every
-    # exchange/join the budget pins
-    io.EAGER_CACHE_RELEASE = False
-    try:
-        got = _plan_counts(_plan(spark, name))
-    finally:
-        io.EAGER_CACHE_RELEASE = True
+    got = _plan_counts(_plan(spark, name))
     budget = _PLAN_BUDGETS[name]
     max_shuffle, min_bhj, max_bnlj = budget[:3]
     max_smj = budget[3] if len(budget) > 3 else 0

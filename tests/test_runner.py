@@ -27,6 +27,17 @@ def mock_plugins(request):
         def extract(self, spark):
             return spark.range(self.config["n"]).withColumnRenamed("id", "v")
 
+    class DocsExtractor(Extractor):
+        def extract(self, spark):
+            from pyspark.sql import functions as F
+
+            i = F.col("id")
+            return spark.range(8).select(
+                i.alias("doc_id"),
+                F.when(i % 2 == 0, "en").otherwise("fr").alias("lang"),
+                F.concat(F.lit("the quick doc "), i.cast("string")).alias("text"),
+            )
+
     class LocalExtractor(Extractor):
         def extract(self, spark):
             return assets_df(spark, [{"asset_type": "Table"}, {"asset_type": "Topic"}])
@@ -57,6 +68,7 @@ def mock_plugins(request):
     for name, cls, reg in [
         ("mock", MockExtractor, registry.extractors),
         ("mock_local", LocalExtractor, registry.extractors),
+        ("mock_docs", DocsExtractor, registry.extractors),
         ("cache_probe", CacheProbeSink, registry.sinks),
         ("collect", CollectSink, registry.sinks),
         ("failing", FailingSink, registry.sinks),
@@ -123,6 +135,18 @@ def test_non_local_source_persists_for_sinks_then_releases(spark, mock_plugins):
     assert run.record_count == 4 and run.sink_records["collect"] == 4
     assert mock_plugins["cache_seen"] == [(True, before + 1)]
     assert _persistent_rdds(spark) == before
+
+
+def test_processor_caches_released_with_run(spark):
+    # reweight's dsir_log_weights caches a per-(doc, bucket) frame; the
+    # run's cache scope releases it with the fanned-out frame
+    spark.catalog.clearCache()
+    recipe = _recipe(["collect"], source="mock_docs")
+    recipe.processors = [PluginRecipe("reweight", {"target_col": "lang", "target_value": "en"})]
+    run = Agent(spark).run(recipe)
+    assert run.success and run.error is None
+    assert run.record_count == 8
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_sink_failure_logged_not_fatal(spark):
