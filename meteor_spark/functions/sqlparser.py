@@ -72,13 +72,6 @@ def join_conditions_col(query: Column) -> Column:
     return F.regexp_extract_all(query, F.lit(JOIN_ON_PATTERN), 1)
 
 
-def using_conditions_col(query: Column) -> Column:
-    return F.transform(
-        F.regexp_extract_all(query, F.lit(JOIN_USING_PATTERN), 1),
-        lambda s: F.concat(F.lit("USING("), F.regexp_replace(s, r"\s+", ""), F.lit(")")),
-    )
-
-
 def filter_conditions_col(query: Column) -> Column:
     return F.transform(
         F.regexp_extract_all(query, F.lit(FILTER_PATTERN), 1),

@@ -1,30 +1,41 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
-embedding-cosine near-dup.
-
-Beyond-reference operators (BASELINE.json north star) designed for a
-100 TB documents table:
+"""Deduplication operators: exact fingerprints, SimHash, passage scrubs,
+and the shingle-set near-duplicate pair pipeline.
 
 - exact_duplicates / dedup_exact: hash-groupBy on a content fingerprint.
   One shuffle on a short hash key; survivor = min(doc_id) per group so
   output is deterministic.
 
-- MinHash+LSH: shingle -> minhash signature -> band -> bucket-join.
-  The minhash of a permutation is approximated as the lexicographic MIN
-  of md5(seed || shingle) — md5 is stable across engines (the DuckDB
-  oracle runs the identical construction), and per-seed mins are
-  computed with built-in array functions only: no UDF, no ML-pipeline
-  dependency, whole-stage codegen end to end. Candidate pairs only form
-  within an LSH band bucket (the classic S-curve), so the join is a
-  bucket-equi-join, not a cross product: at 1000 executors the shuffle
-  key is (band_index, band_hash) which distributes uniformly.
+- Shingle-set pairs: every near-dup pair operator here (and the
+  streaming near-dup store in streaming.pipeline) runs one skeleton,
+  shingle frame -> candidate generator -> verify:
+    - shingle_frame: (id, sh), the distinct word k-grams of each doc,
+      tokenized once;
+    - candidate generators: minhash_bands + band_pair_join (LSH,
+      probabilistic), rare_first_prefix (lossless prefix filtering;
+      prefix_filter_jaccard_pairs self-joins the prefixes,
+      containment_pairs probes full postings with them) and the
+      sorted-neighborhood window;
+    - verify: set_jaccard, |A ∩ B| / (|A| + |B| - |A ∩ B|) over two
+      shingle arrays with a single array intersection, joined onto the
+      candidates by jaccard_pairs. Each operator keeps its own decision
+      rule, the one its oracle uses: batch operators round, then
+      compare; the streaming store compares the unrounded value.
+  exact_jaccard_pairs_blocked reaches the prefix filter's pair set
+  outside the skeleton, through a broadcast numpy posting join.
+
+- MinHash+LSH: the minhash of a permutation is approximated as the
+  lexicographic MIN of md5(seed || shingle) — md5 is stable across
+  engines (the DuckDB oracle runs the identical construction), and
+  per-seed mins are computed with built-in array functions only: no
+  UDF, no ML-pipeline dependency, whole-stage codegen end to end.
+  Candidate pairs only form within an LSH band bucket (the classic
+  S-curve), so the join is a bucket-equi-join, not a cross product: at
+  1000 executors the shuffle key is (band_index, band_hash) which
+  distributes uniformly.
 
 - SimHash: 32-bit sign-sum sketch over word md5 bits, expressed
   relationally (explode words x bit positions -> groupBy doc) so both
   Spark and the SQL oracle agree bit-for-bit.
-
-- n-gram Jaccard: exact pairwise verification used on LSH candidates
-  (and directly on small blocks): |A ∩ B| / |A ∪ B| over distinct word
-  sets with array_intersect/array_union.
 """
 
 from __future__ import annotations
@@ -171,25 +182,16 @@ def minhash_signature(sh: Column, num_hashes: int = 12) -> Column:
 # --------------------------------------------------------- minhash lsh
 
 def minhash_bands(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 12,
-    bands: int = 4,
-    sh_df: DataFrame | None = None,
+    sh: DataFrame, id_col: str = "doc_id", num_hashes: int = 12, bands: int = 4
 ) -> DataFrame:
-    """(id, band_index, band_key): LSH banding of minhash signatures.
+    """(id, band, band_key): LSH banding of the minhash signatures of a
+    shingle frame (id, sh), e.g. shingle_frame's output.
 
     rows_per_band = num_hashes // bands; band_key = md5 of the
-    concatenated minhashes in that band. Pass a pre-built (and possibly
-    persisted) `sh_df` shingle frame to reuse shingle state across
-    stages; `df`/`text_col`/`k` are ignored then.
+    concatenated minhashes in that band.
     """
     rows = num_hashes // bands
-    if sh_df is None:
-        sh_df = shingle_frame(df, text_col, id_col, k)
-    base = sh_df.select(F.col(id_col), minhash_signature(F.col("sh"), num_hashes).alias("sig"))
+    base = sh.select(F.col(id_col), minhash_signature(F.col("sh"), num_hashes).alias("sig"))
     band_structs = F.array(
         *[
             F.struct(
@@ -209,9 +211,18 @@ def minhash_bands(
 
 
 def band_pair_join(band_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing at least one LSH band —
-    the equi-self-join both the candidate-pairs API and the full
-    near-dup pipeline run over a (persisted) band frame."""
+    """Distinct candidate pairs (a < b) sharing at least one LSH band.
+
+    Self-join on (band, band_key) — an equi-join whose key count grows
+    with corpus size, so it parallelizes; within-bucket pair blowup is
+    bounded by bucket size (hot buckets = near-identical content).
+
+    Persist the band frame first (io.cached): without it each join side
+    re-derives shingles -> signatures -> band keys, and the doubled
+    expression tree degrades far worse than 2x (measured 140s vs 9s on
+    a 50k-doc corpus). The persisted state is (id, band, band_key) — a
+    few dozen bytes per doc.
+    """
     l, r = band_df.alias("l"), band_df.alias("r")
     return (
         l.join(r, ["band", "band_key"])
@@ -221,57 +232,32 @@ def band_pair_join(band_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 12,
-    bands: int = 4,
-) -> DataFrame:
-    """Distinct candidate pairs (a < b) sharing at least one LSH band.
-
-    Self-join is on (band, band_key) — an equi-join whose key count grows
-    with corpus size, so it parallelizes; within-bucket pair blowup is
-    bounded by bucket size (hot buckets = near-identical content).
-
-    The band frame is persisted before the self-join: without it each
-    join side re-derives text -> shingles -> signatures -> band keys,
-    and the doubled expression tree degrades far worse than 2x
-    (measured 140s vs 9s on a 50k-doc corpus). The persisted state is
-    (id, band, band_key) — a few dozen bytes per doc.
-    """
-    b = cached(minhash_bands(df, text_col, id_col, k, num_hashes, bands))
-    return band_pair_join(b, id_col)
+def set_jaccard(a: Column | str, b: Column | str) -> Column:
+    """Unrounded Jaccard of two distinct-element array columns (names or
+    Columns): |A ∩ B| / (|A| + |B| - |A ∩ B|). The union size comes
+    from the set sizes, so there is one array_intersect per pair and no
+    array_union (halves the dominant array work)."""
+    si = F.size(F.array_intersect(a, b))
+    return si.cast("double") / (F.size(a) + F.size(b) - si)
 
 
 def jaccard_pairs(
-    df: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
+    sh: DataFrame,
     id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.5,
     round_to: int = 4,
-    sh_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Verify candidate pairs with exact shingle Jaccard; keep >= threshold.
-
-    Pass a pre-built (persisted) `sh_df` shingle frame to reuse shingle
-    state; `df`/`text_col`/`k` are ignored then."""
-    docs = sh_df if sh_df is not None else shingle_frame(df, text_col, id_col, k)
-    a = docs.alias("da")
-    b = docs.alias("db")
-    # |A ∪ B| = |A| + |B| - |A ∩ B| for distinct sets: one intersect
-    # instead of intersect + union (halves the dominant array work).
-    si = F.size(F.array_intersect("da.sh", "db.sh"))
-    jac = si.cast("double") / (F.size("da.sh") + F.size("db.sh") - si)
-    joined = (
-        pairs.join(a, pairs.a == F.col(f"da.{id_col}"))
-        .join(b, pairs.b == F.col(f"db.{id_col}"))
-        .select("a", "b", F.round(jac, round_to).alias("jaccard"))
+    """Verify candidate pairs (a, b) against the shingle frame sh (id,
+    sh): (a, b, jaccard) with jaccard rounded to round_to places, kept
+    when the rounded value is >= threshold (the oracles' rule)."""
+    da, db = sh.alias("da"), sh.alias("db")
+    return (
+        pairs.join(da, pairs.a == F.col(f"da.{id_col}"))
+        .join(db, pairs.b == F.col(f"db.{id_col}"))
+        .select("a", "b", F.round(set_jaccard("da.sh", "db.sh"), round_to).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
-    return joined.filter(F.col("jaccard") >= threshold)
 
 
 def minhash_near_duplicates(
@@ -293,12 +279,9 @@ def minhash_near_duplicates(
     the persist is a few hundred bytes per doc of hash state, far
     smaller than the text itself.
     """
-    sh_df = cached(shingle_frame(df, text_col, id_col, k))
-    band_df = cached(minhash_bands(df, text_col, id_col, k, num_hashes, bands, sh_df=sh_df))
-    pairs = band_pair_join(band_df, id_col)
-    return jaccard_pairs(
-        df, pairs, text_col, id_col, k, threshold, round_to, sh_df=sh_df
-    )
+    sh = cached(shingle_frame(df, text_col, id_col, k))
+    pairs = band_pair_join(cached(minhash_bands(sh, id_col, num_hashes, bands)), id_col)
+    return jaccard_pairs(pairs, sh, id_col, threshold, round_to)
 
 
 # -------------------------------------------------------------- simhash
@@ -510,6 +493,40 @@ def dedup_incremental(
     return fresh.join(survivors, ["__fp", id_col], "left_semi").drop("__fp")
 
 
+# Broadcast ceiling for the prefix filter's index side: below Spark's
+# 8 GB broadcast limit, and above the 100x fixture's ~4 GB index, which
+# MUST broadcast (see prefix_filter_jaccard_pairs).
+_PREFIX_BROADCAST_BUDGET_BYTES = 6 << 30
+
+
+def rare_first_prefix(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """(id, sz, gram, rn): the rare-first prefix of every shingle set
+    in sh (id, sh, sz = size(sh)) — its first sz - ceil(t*sz) + 1 grams
+    under the global (document frequency, gram) order, rn being the
+    1-based rank.
+
+    The prefix theorem behind both prefix joins: under any common total
+    order, a set of size n whose overlap with another set reaches
+    ceil(t*n) must share one of its first n - ceil(t*n) + 1 grams with
+    it, so an equi-join on prefix grams is a lossless candidate
+    generator. Rare-first ordering keeps those join keys near-unique —
+    the hot-token skew an LSH band join can suffer never forms. One
+    shuffle for gram frequencies, one window for the ranks.
+    """
+    from pyspark.sql import Window
+
+    toks = sh.select(F.col(id_col), "sz", F.explode("sh").alias("gram"))
+    freq = toks.groupBy("gram").agg(F.count("*").alias("df"))
+    w = Window.partitionBy(id_col).orderBy("df", "gram")
+    prefix_len = F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1
+    return (
+        toks.join(freq, "gram")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= prefix_len)
+        .select(F.col(id_col), "sz", "gram", "rn")
+    )
+
+
 def prefix_filter_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -517,35 +534,21 @@ def prefix_filter_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     round_to: int = 4,
-    broadcast_index: bool | None = None,
-    broadcast_budget_bytes: int = 6 << 30,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard join via prefix filtering (the PPJoin
     family, Xiao et al. WWW'08) — every pair with shingle Jaccard >=
     threshold, with NO approximation and no quadratic candidate set.
 
-    Shingle sets are ordered by ascending global document frequency
-    (rarest first); a set of size n only needs its first
-    n - ceil(t*n) + 1 tokens as its PREFIX: two sets meeting the
-    threshold must share a prefix token under any common total order,
-    so the equi-join on prefix tokens is a lossless candidate
-    generator. Rare-first ordering keeps those join keys near-unique —
-    the hot-token skew an LSH band join can suffer never forms. A size
-    ratio filter (t*|a| <= |b|, symmetric) prunes candidates before the
-    exact verify.
+    Candidates are pairs sharing a rare_first_prefix gram; a size ratio
+    filter (t*|a| <= |b|, symmetric) and a positional filter prune them
+    before the exact verify (jaccard_pairs).
 
     vs minhash LSH: LSH is probabilistic (misses pairs); this is exact
     at higher verify cost — the right tool when the dedup policy must
     be auditable. One shuffle for token frequencies, one window for
     prefix ranks, one equi-join, one broadcast-sized verify join.
     """
-    from pyspark.sql import Window
-
     sh = cached(shingle_frame(df, text_col, id_col, k).withColumn("sz", F.size("sh")))
-    toks = sh.select(F.col(id_col), "sz", F.explode("sh").alias("gram"))
-    freq = toks.groupBy("gram").agg(F.count("*").alias("df"))
-    w = Window.partitionBy(id_col).orderBy("df", "gram")
-    prefix_len = F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1
     # PERSIST the prefix frame: it is read by BOTH sides of the
     # candidate self-join, and Spark plans each side as its own full
     # explode -> freq-join -> window-sort subtree (AQE does not reuse
@@ -557,12 +560,7 @@ def prefix_filter_jaccard_pairs(
     # (An r12 note claimed this persist measured as a loss; that
     # measurement predates the positional-filter rewrite — the r13
     # plan dump shows the window genuinely running twice without it.)
-    prefixes = cached(
-        toks.join(freq, "gram")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= prefix_len)
-        .select(F.col(id_col), "sz", "gram", "rn")
-    )
+    prefixes = cached(rare_first_prefix(sh, id_col, threshold))
     pa, pb = prefixes.alias("pa"), prefixes.alias("pb")
     # POSITIONAL filter (the "PP" in PPJoin): both prefixes are sorted by
     # the same global (df, gram) order, so matched tokens appear in the
@@ -588,32 +586,21 @@ def prefix_filter_jaccard_pairs(
     # scale the same collapse comes from bucketing both sides by gram.
     # Budget in estimated BYTES, not rows (r10 advice): gram strings are
     # k-word shingles of unbounded length, so a row-count threshold can
-    # blow the 8 GB broadcast/driver ceiling on long-token corpora. One
-    # agg over the persisted prefix frame yields both the exact
-    # prefix row count and the mean prefix-gram length; estimated
-    # broadcast size = rows x (mean gram bytes + ~64B UnsafeRow/id/sz/rn
-    # overhead), held under a 6 GB default margin (below Spark's 8 GB
-    # broadcast ceiling; the 100x fixture's 48M-row/~4GB index MUST
-    # broadcast — the shuffle fallback writes the 4.84B-row prefix
-    # expansion to disk, ~190 GB, measured fatal twice). Callers that
-    # need the plan fully lazy (or know their corpus) pin
-    # broadcast_index explicitly and skip the sizing action.
-    if broadcast_index is None:
-        # ONE action does double duty: it materializes the persisted
-        # prefix cache (the frame both join sides read) AND yields the
-        # exact index row count + mean gram bytes for the broadcast
-        # budget. The former sizing job ran a separate interpreted-HOF
-        # fold over the shingle frame to ESTIMATE the same count this
-        # frame carries exactly (per-doc prefix length sums — identical
-        # value), and its work warmed nothing the join reuses.
-        est = prefixes.agg(
-            F.count("*").alias("npfx"),
-            F.avg(F.octet_length("gram")).alias("gbytes"),
-        ).first()
-        n_prefix = est["npfx"] or 0
-        est_bytes = n_prefix * ((est["gbytes"] or 0.0) + 64.0)
-        broadcast_index = est_bytes <= broadcast_budget_bytes
-    pb_side = F.broadcast(pb) if broadcast_index else pb
+    # blow the 8 GB broadcast/driver ceiling on long-token corpora. ONE
+    # action over the persisted prefix frame does double duty: it
+    # materializes the cache both join sides read AND yields the exact
+    # prefix row count and mean gram bytes; estimated broadcast size =
+    # rows x (mean gram bytes + ~64B UnsafeRow/id/sz/rn overhead), held
+    # under _PREFIX_BROADCAST_BUDGET_BYTES (the 100x fixture's
+    # 48M-row/~4GB index MUST broadcast — the shuffle fallback writes
+    # the 4.84B-row prefix expansion to disk, ~190 GB, measured fatal
+    # twice).
+    est = prefixes.agg(
+        F.count("*").alias("npfx"),
+        F.avg(F.octet_length("gram")).alias("gbytes"),
+    ).first()
+    est_bytes = (est["npfx"] or 0) * ((est["gbytes"] or 0.0) + 64.0)
+    pb_side = F.broadcast(pb) if est_bytes <= _PREFIX_BROADCAST_BUDGET_BYTES else pb
     cands = (
         pa.join(
             pb_side,
@@ -635,15 +622,7 @@ def prefix_filter_jaccard_pairs(
         )
         .select("a", "b")
     )
-    sa, sb = sh.alias("sa"), sh.alias("sb")
-    si = F.size(F.array_intersect("sa.sh", "sb.sh"))
-    jac = si.cast("double") / (F.col("sa.sz") + F.col("sb.sz") - si)
-    return (
-        cands.join(sa, F.col("a") == F.col(f"sa.{id_col}"))
-        .join(sb, F.col("b") == F.col(f"sb.{id_col}"))
-        .select("a", "b", F.round(jac, round_to).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return jaccard_pairs(cands, sh, id_col, threshold, round_to)
 
 
 def _posting_pair_counts_block(doc_idxs, gid_lists, post_indptr, post_docs):
@@ -1071,7 +1050,7 @@ def containment_pairs(
     Candidate generation is the asymmetric half of prefix filtering
     (cf. prefix_filter_jaccard_pairs): only the CONTAINED side A needs a
     prefix — if C(A→B) >= t then fewer than |A| - ceil(t|A|) + 1 of A's
-    rarest shingles can miss B, so A's rare-first prefix against B's
+    rarest shingles can miss B, so A's rare_first_prefix against B's
     full postings list is a lossless candidate generator. Rare-first
     ordering keeps the join keys near-unique (A probes with its RAREST
     grams, so B's postings for those grams are short — the inverted
@@ -1094,24 +1073,15 @@ def containment_pairs(
     SOME consistent total order, so (df, hashed-gram) ordering keeps the
     candidate generator lossless.
     """
-    from pyspark.sql import Window
-
     sh = cached(
         shingle_frame(df, text_col, id_col, k)
         .select(F.col(id_col), F.transform("sh", lambda g: F.xxhash64(g)).alias("sh"))
         .withColumn("sz", F.size("sh"))
     )
-    toks = sh.select(F.col(id_col), "sz", F.explode("sh").alias("gram"))
-    freq = toks.groupBy("gram").agg(F.count("*").alias("df"))
-    w = Window.partitionBy(id_col).orderBy("df", "gram")
-    prefix_len = F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)) + 1
-    prefixes = (
-        toks.join(freq, "gram")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= prefix_len)
-        .select(F.col(id_col).alias("a"), F.col("sz").alias("sza"), "gram")
+    prefixes = rare_first_prefix(sh, id_col, threshold).select(
+        F.col(id_col).alias("a"), F.col("sz").alias("sza"), "gram"
     )
-    postings = toks.select(F.col(id_col).alias("b"), F.col("sz").alias("szb"), "gram")
+    postings = sh.select(F.col(id_col).alias("b"), F.col("sz").alias("szb"), F.explode("sh").alias("gram"))
     cands = (
         prefixes.join(
             postings,
@@ -1219,9 +1189,7 @@ def sorted_neighborhood_pairs(
     cand = lo.join(hi, "__blk").filter(
         (F.col("rb") > F.col("ra")) & (F.col("rb") <= F.col("ra") + window)
     )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    jac = F.round(inter / union.cast("double"), round_to)
+    jac = F.round(set_jaccard("sa", "sb"), round_to)
     return (
         cand.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"), jac.alias("jaccard")

@@ -4476,14 +4476,14 @@ def neardup_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(
             f"{store}/shingles"
         )
-        minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
+        minhash_bands(csh).write.mode("overwrite").parquet(f"{store}/bands")
     with cache_scope():
         bsh = cached(shingle_frame(batch, "text", "doc_id", _MINHASH_K))
         for _ in range(2):  # at-least-once: same survivors appended twice
             bsh.withColumn("__corpus", F.lit(False)).write.mode("append").parquet(
                 f"{store}/shingles"
             )
-            minhash_bands(batch, sh_df=bsh).write.mode("append").parquet(f"{store}/bands")
+            minhash_bands(bsh).write.mode("append").parquet(f"{store}/bands")
 
     compact_neardup_store(spark, store)
     return (

@@ -46,16 +46,6 @@ def _meta_version(name: str) -> int:
     return int(stem[1:]) if stem.startswith("v") and stem[1:].isdigit() else -1
 
 
-def _spark_type_to_simple(t) -> str:
-    """Delta schemaString is a Spark StructType JSON — reuse Spark's own
-    parser so nested types print identically to the parquet walker."""
-    from pyspark.sql.types import StructType
-
-    if isinstance(t, str):
-        return StructType.fromJson(json.loads(t)).simpleString()
-    return t
-
-
 def delta_live_files(spark: SparkSession, log_dir: str) -> DataFrame:
     """Replay a `_delta_log` directory into the live file set:
     (path, version, num_records, size_bytes). Latest action per path wins;

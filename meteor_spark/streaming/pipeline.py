@@ -615,29 +615,7 @@ def incremental_neardup_stream(
     store — the production continuation path after a restart or a
     compact_neardup_store rewrite.
     """
-    from meteor_spark.operators.dedup import minhash_signature, shingle_frame
-
-    rows = num_hashes // bands
-
-    def _bands_of(sh_df: DataFrame) -> DataFrame:
-        base = sh_df.select(F.col(id_col), minhash_signature(F.col("sh"), num_hashes).alias("sig"))
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[F.element_at(F.col("sig"), b * rows + r + 1).cast("string") for r in range(rows)],
-                        )
-                    ).alias("band_key"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return base.select(F.col(id_col), F.explode(structs).alias("bk")).select(
-            F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-        )
+    from meteor_spark.operators.dedup import band_pair_join, minhash_bands, set_jaccard, shingle_frame
 
     # origin marker travels WITH the store rows (the exact-dedup twin's
     # NULL-id trick): identifying stream survivors by anti-joining ids
@@ -662,7 +640,7 @@ def incremental_neardup_stream(
                     .parquet(f"{store_dir}/shingles")
                 )
                 w2 = pool.submit(
-                    lambda: _bands_of(corpus_sh)
+                    lambda: minhash_bands(corpus_sh, id_col, num_hashes, bands)
                     .write.mode("overwrite")
                     .parquet(f"{store_dir}/bands")
                 )
@@ -676,7 +654,7 @@ def incremental_neardup_stream(
         with cache_scope():
             s = batch_df.sparkSession
             sh_b = cached(shingle_frame(batch_df, text_col, id_col, k))
-            b_b = cached(_bands_of(sh_b))
+            b_b = cached(minhash_bands(sh_b, id_col, num_hashes, bands))
 
             # compacted stores are hive-partitioned by band_key prefix:
             # prune the candidate scan to the batch's own prefixes, and
@@ -694,30 +672,22 @@ def incremental_neardup_stream(
                 .distinct()
             )
             osh = store_sh.select(F.col(id_col).alias("__old"), F.col("sh").alias("osh"))
-            si = F.size(F.array_intersect("sh", "osh"))
-            jac = si.cast("double") / (F.size("sh") + F.size("osh") - si)
             dup_of_store = (
                 cand.join(sh_b, id_col)
                 .join(osh, "__old")
-                .filter(jac >= threshold)
+                .filter(set_jaccard("sh", "osh") >= threshold)
                 .select(id_col)
                 .distinct()
             )
 
             # batch-internal: min-id survivor among near-dup pairs
-            l, r = b_b.alias("l"), b_b.alias("r")
-            pairs = (
-                l.join(r, ["band", "band_key"])
-                .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-                .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-                .distinct()
-            )
             sa = sh_b.select(F.col(id_col).alias("a"), F.col("sh").alias("ash"))
             sb = sh_b.select(F.col(id_col).alias("b"), F.col("sh").alias("bsh"))
-            si2 = F.size(F.array_intersect("ash", "bsh"))
-            jac2 = si2.cast("double") / (F.size("ash") + F.size("bsh") - si2)
             dup_in_batch = (
-                pairs.join(sa, "a").join(sb, "b").filter(jac2 >= threshold)
+                band_pair_join(b_b, id_col)
+                .join(sa, "a")
+                .join(sb, "b")
+                .filter(set_jaccard("ash", "bsh") >= threshold)
                 .select(F.col("b").alias(id_col))
                 .distinct()
             )
@@ -734,7 +704,7 @@ def incremental_neardup_stream(
                 ).parquet(f"{store_dir}/shingles")
 
             def _append_bands() -> None:
-                nb = _bands_of(survivors_sh)
+                nb = minhash_bands(survivors_sh, id_col, num_hashes, bands)
                 if store_pcol is not None:
                     _partitioned_append(nb, store_pcol, "band_key", f"{store_dir}/bands")
                 else:

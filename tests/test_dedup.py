@@ -115,7 +115,8 @@ def test_lsh_recall_on_planted_near_dups(spark):
     """
     import random
 
-    from meteor_spark.operators.dedup import minhash_candidate_pairs
+    from meteor_spark.io import cache_scope, cached
+    from meteor_spark.operators.dedup import band_pair_join, minhash_bands, shingle_frame
 
     rng = random.Random(7)
     vocab = [f"tok{i}" for i in range(500)]
@@ -130,18 +131,21 @@ def test_lsh_recall_on_planted_near_dups(spark):
         rows.append((2 * d + 1, " ".join(mut)))
         planted.append((2 * d, 2 * d + 1))
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    cand = {(r.a, r.b) for r in minhash_candidate_pairs(df).collect()}
+    with cache_scope():
+        bands = cached(minhash_bands(shingle_frame(df)))
+        cand = {(r.a, r.b) for r in band_pair_join(bands).collect()}
     missed = [p for p in planted if p not in cand]
     assert not missed, f"LSH missed planted near-dups: {missed}"
 
 
-def test_prefix_filter_jaccard_equals_naive(spark, sf_dir):
+@pytest.mark.parametrize("t", [0.5, 0.8])
+def test_prefix_filter_jaccard_equals_naive(spark, sf_dir, t):
     """Prefix filtering is EXACT: the rare-first prefix equi-join may
-    never lose a pair vs the O(n^2) Jaccard definition."""
+    never lose a pair vs the O(n^2) Jaccard definition, at any threshold
+    (the prefix length sz - ceil(t*sz) + 1 depends on t)."""
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    t = 0.5
     got = {
         (r["a"], r["b"], r["jaccard"])
         for r in dedup.prefix_filter_jaccard_pairs(docs, threshold=t).collect()
@@ -255,7 +259,8 @@ def test_duplicated_spans_planted_boilerplate(spark):
     assert 3 not in spans
 
 
-def test_containment_pairs_equals_naive_and_is_asymmetric(spark):
+@pytest.mark.parametrize("t", [0.5, 0.7, 0.9])
+def test_containment_pairs_equals_naive_and_is_asymmetric(spark, t):
     from meteor_spark.operators.dedup import containment_pairs, shingle_frame
     from pyspark.sql import functions as F
 
@@ -269,7 +274,7 @@ def test_containment_pairs_equals_naive_and_is_asymmetric(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r["a"], r["b"]): r["containment"]
-        for r in containment_pairs(df, threshold=0.7).collect()
+        for r in containment_pairs(df, threshold=t).collect()
     }
 
     # naive reference over the same shingle sets
@@ -277,13 +282,14 @@ def test_containment_pairs_equals_naive_and_is_asymmetric(spark):
     want = {}
     for a, sa in sh.items():
         for b, sb in sh.items():
-            if a != b and sa and len(sa & sb) / len(sa) >= 0.7:
+            if a != b and sa and len(sa & sb) / len(sa) >= t:
                 want[(a, b)] = round(len(sa & sb) / len(sa), 4)
     assert got == want
-    # asymmetry: 1 is contained in 2, but 2 is not contained in 1
-    assert (1, 2) in got and (2, 1) not in got
-    # exact dups contain each other both ways at 1.0
-    assert got[(1, 4)] == 1.0 and got[(4, 1)] == 1.0
+    if t == 0.7:
+        # asymmetry: 1 is contained in 2, but 2 is not contained in 1
+        assert (1, 2) in got and (2, 1) not in got
+        # exact dups contain each other both ways at 1.0
+        assert got[(1, 4)] == 1.0 and got[(4, 1)] == 1.0
 
 
 def test_sorted_neighborhood_finds_prefix_sharing_neardups(spark):

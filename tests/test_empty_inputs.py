@@ -211,7 +211,7 @@ def test_compaction_on_seed_only_store(spark, sf_dir, tmp_path):
     store = str(tmp_path / "store")
     csh = shingle_frame(corpus, "text", "doc_id", 3)
     csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(f"{store}/shingles")
-    minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
+    minhash_bands(csh).write.mode("overwrite").parquet(f"{store}/bands")
     rep = compact_neardup_store(spark, store)
     assert rep["bands"]["rows"][0] == rep["bands"]["rows"][1] == 200
     assert rep["shingles"]["rows"][0] == rep["shingles"]["rows"][1] == 50

@@ -445,6 +445,13 @@ _PLAN_BUDGETS = {
     # sizes, global dist, total); the grid join broadcasts the
     # attr-domain side
     "user_tcloseness_census": (22, 5, 2),
+    # shingle-set pair gates: cold counts observed before their
+    # rare-first prefix and Jaccard verify became shared
+    # (dedup.rare_first_prefix, dedup.jaccard_pairs), and unchanged
+    # after; the prefix filter's persisted prefix and shingle frames
+    # repeat per consumer in the plan string
+    "prefix_filter_jaccard_pairs": (28, 7, 0),
+    "ngram_jaccard_pairs": (3, 1, 0),
 }
 
 

@@ -256,12 +256,12 @@ def _seed_store(spark, sf_dir, store, dup_appends=2):
     batch = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 140))
     csh = shingle_frame(corpus, "text", "doc_id", 3).persist()
     csh.withColumn("__corpus", F.lit(True)).write.mode("overwrite").parquet(f"{store}/shingles")
-    minhash_bands(corpus, sh_df=csh).write.mode("overwrite").parquet(f"{store}/bands")
+    minhash_bands(csh).write.mode("overwrite").parquet(f"{store}/bands")
     csh.unpersist()
     bsh = shingle_frame(batch, "text", "doc_id", 3).persist()
     for _ in range(dup_appends):
         bsh.withColumn("__corpus", F.lit(False)).write.mode("append").parquet(f"{store}/shingles")
-        minhash_bands(batch, sh_df=bsh).write.mode("append").parquet(f"{store}/bands")
+        minhash_bands(bsh).write.mode("append").parquet(f"{store}/bands")
     bsh.unpersist()
     return corpus
 
@@ -283,7 +283,7 @@ def test_compaction_drops_duplicate_appends_and_partitions(spark, sf_dir, tmp_pa
 
 
 def test_pruned_store_bands_partition_prunes(spark, sf_dir, tmp_path):
-    from meteor_spark.operators.dedup import minhash_bands
+    from meteor_spark.operators.dedup import minhash_bands, shingle_frame
     from meteor_spark.queries import _t
     from meteor_spark.streaming.pipeline import compact_neardup_store, pruned_store_bands
 
@@ -291,7 +291,7 @@ def test_pruned_store_bands_partition_prunes(spark, sf_dir, tmp_path):
     _seed_store(spark, sf_dir, store, dup_appends=1)
     compact_neardup_store(spark, store)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    batch_bands = minhash_bands(docs.filter(F.col("doc_id") < 5)).persist()
+    batch_bands = minhash_bands(shingle_frame(docs.filter(F.col("doc_id") < 5))).persist()
     store_bands = spark.read.parquet(f"{store}/bands")
     pruned = pruned_store_bands(store_bands, batch_bands)
     # the pruned view must show partition filters in its scan...
@@ -302,7 +302,7 @@ def test_pruned_store_bands_partition_prunes(spark, sf_dir, tmp_path):
     cut = pruned.join(batch_bands, ["band", "band_key"]).count()
     assert full == cut
     # identity on an uncompacted store
-    raw = minhash_bands(docs.filter(F.col("doc_id") < 10))
+    raw = minhash_bands(shingle_frame(docs.filter(F.col("doc_id") < 10)))
     assert pruned_store_bands(raw, batch_bands) is raw
     batch_bands.unpersist()
 
